@@ -17,12 +17,19 @@ Design for scale — two deliberate plan shapes:
    paths (`#(...)`) and conflicting prefix paths fall back to
    get_json_object.
 
-2. SINGLE PASS. A spec with K extract blocks is NOT a K-way union
-   (K source scans): every block is a nullable struct in ONE array,
-   exclusion filters fold into the array guard, and explode drops
-   non-applicable entries. One scan, one Generate, no shuffle, codegen
-   end to end. Per-event record order (block order) is preserved,
-   matching the reference's append order (transformer.go:151-175).
+2. SINGLE PASS. `route()` is ONE projection over the single parse:
+   it tags every event ok / excluded / error (exclusion filters and
+   the regexp error condition are evaluated once, in that outcome
+   column) and carries the records of ok events and the raw value of
+   error events. A spec with K extract blocks is NOT a K-way union (K
+   source scans): every block is a nullable struct in ONE array that
+   the `records()` view explodes; a single-block spec keeps flat
+   columns, so its view is a filter + select. One scan, one parse, no
+   shuffle, codegen end to end. Per-event record order (block order)
+   is preserved, matching the reference's append order
+   (transformer.go:151-175). The engine persists one routed frame per
+   micro-batch and feeds the sink (`records()`) and the DLQ
+   (`errors()`) from it, so no event is scanned or parsed twice.
 
 Semantics replicated exactly (citations into /root/reference):
 - excludeEventsWith black/white/empty, OR across filters
@@ -44,15 +51,16 @@ Semantics replicated exactly (citations into /root/reference):
   applied to the raw event or to a previously extracted field (first
   applicable block declaring it; field dropped unless keepField;
   transformer.go:201-226). Non-matching events are ERRORS
-  (transformer.go:229-242) routed to `rejected()`, not silently empty
-  — the engine applies the spec's HOUE policy (discard/dlq/fail).
+  (transformer.go:229-242): outcome `error`, read through `errors()`,
+  not silently empty — the engine applies the spec's HOUE policy
+  (discard/dlq/fail).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Row, functions as F, types as T
 
 from geist_spark.functions.json_path import (
     _split_gjson,
@@ -70,6 +78,12 @@ from geist_spark.spec.model import (
 
 REGEXP_PAYLOAD_KEY = "regexppayload"
 PARSED_COL = "__geist_parsed"
+# route() columns: the per-row outcome, the raw value of error rows and
+# the record array of multi-block specs
+OUTCOME_COL = "__geist_outcome"
+RAW_COL = "__geist_raw"
+RECS_COL = "__geist_recs"
+OUTCOME_OK, OUTCOME_EXCLUDED, OUTCOME_ERROR = "ok", "excluded", "error"
 
 
 # ---------------------------------------------------------------- resolver
@@ -239,8 +253,10 @@ def _go_regex_to_java(expr: str) -> tuple[str, list[str]]:
 
 
 class CompiledTransform:
-    """Call `apply(df)` for the happy path, `rejected(df)` for rows the
-    reference errors on (regexp non-match / time-conversion failure)."""
+    """`route(df)` tags every event ok / excluded / error in one pass;
+    `records()` is its happy path, `errors()` the rows the reference
+    errors on (regexp non-match / time-conversion failure). `apply(df)`
+    and `rejected(df)` are the same two views over a fresh route."""
 
     def __init__(self, spec: TransformSpec):
         self.spec = spec
@@ -491,110 +507,152 @@ class CompiledTransform:
         if rx is None:
             return None
         t = self.spec
+        # a NULL event is empty bytes, so every row gets an outcome
+        raw = F.coalesce(res.value, F.lit(""))
         if not rx.field:
             # applyRegExp always runs on the raw event (even when its
             # payload would be discarded, transformer.go:179-198)
-            return self._rx_fail(res.value)
+            return self._rx_fail(raw)
         # field mode: fail on the field bytes of the first applicable
         # declaring block; if no block matched at all -> "field not
         # extracted" error; if blocks matched but none declares the
         # field -> regexp runs on the raw event (transformer.go:201-226)
-        branches = []
+        chain: Column | None = None
+        other_app = F.lit(False)  # any applicable non-declaring block
         for i, ef in enumerate(t.extract_fields):
             app = applicable_condition(res, ef.for_events_with, ef.exclude_events_with)
-            branches.append((i, app, ef))
-        any_app = F.lit(False)
-        for _, app, _ef in branches:
-            any_app = any_app | app
-        chain: Column | None = None
-        for i, app, ef in branches:
-            if i in self._declaring:
-                src = _typed_extract(
-                    res,
-                    next(f.json_path for f in ef.fields if f.id == rx.field),
-                    next(f.type for f in ef.fields if f.id == rx.field),
-                )
-                cond = self._rx_fail(src)
-                chain = F.when(app, cond) if chain is None else chain.when(app, cond)
-        fallback = self._rx_fail(res.value)  # no declaring block applicable
-        body = fallback if chain is None else chain.otherwise(fallback)
+            if i not in self._declaring:
+                other_app = other_app | app
+                continue
+            f = next(f for f in ef.fields if f.id == rx.field)
+            cond = self._rx_fail(_typed_extract(res, f.json_path, f.type))
+            chain = F.when(app, cond) if chain is None else chain.when(app, cond)
+        if len(self._declaring) < len(t.extract_fields):
+            fallback = self._rx_fail(raw)
+            chain = (
+                F.when(other_app, fallback) if chain is None
+                else chain.when(other_app, fallback)
+            )
         # no extract output at all -> "wanted field was not extracted"
-        return F.when(~any_app, F.lit(True)).otherwise(body)
+        return chain.otherwise(F.lit(True))
 
     # -- public ------------------------------------------------------
+
+    def route(
+        self,
+        df: DataFrame,
+        value_col: str = "value",
+        keep_cols: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """Every input row, once, with its outcome: ONE projection over
+        ONE `from_json` (module docstring, SINGLE PASS).
+
+        Columns, in this order: `keep_cols`, OUTCOME_COL (ok /
+        excluded / error), RAW_COL (the raw value, error rows only),
+        then the records of ok rows: the output fields for a
+        single-block spec, else RECS_COL, the array of the row's
+        records in block order. `records()` and `errors()` are the two
+        views; a caller that needs both persists the routed frame once
+        and reads both views from it."""
+        res, pre = self._prepare(df, value_col, keep_cols)
+        branches = self._branches(res)
+        has_rec = F.lit(False)
+        for app, _ in branches:
+            has_rec = has_rec | app
+        oc = F.when(has_rec, F.lit(OUTCOME_OK)).otherwise(F.lit(OUTCOME_EXCLUDED))
+        err = self._error_cond(res)
+        if err is not None:
+            oc = F.when(err, F.lit(OUTCOME_ERROR)).otherwise(oc)
+        if self.has_excludes:
+            oc = F.when(self._exclude_cond(res), F.lit(OUTCOME_EXCLUDED)).otherwise(oc)
+        # the outcome is its own projection: the record and raw-value
+        # guards below read it as a column instead of re-deriving the
+        # exclusion / regexp conditions per guard
+        mid = pre.withColumn(OUTCOME_COL, oc)
+        ok = F.col(OUTCOME_COL) == OUTCOME_OK
+
+        def record(cols: dict[str, Column]) -> list[tuple[str, Column]]:
+            return [
+                (fid, cols[fid].cast(ftype) if fid in cols else F.lit(None).cast(ftype))
+                for fid, ftype in self.output_fields
+            ]
+
+        if len(branches) == 1:
+            # one block emits at most one record per event: flat
+            # columns, no Generate, so the records() view is a plain
+            # filter + select in one WholeStageCodegen span
+            rec_cols = [
+                F.when(ok, c).alias(name) for name, c in record(branches[0][1])
+            ]
+        elif branches:
+            structs = [
+                F.when(app, F.struct(*[c.alias(name) for name, c in record(cols)]))
+                for app, cols in branches
+            ]
+            rec_cols = [
+                F.when(ok, F.filter(F.array(*structs), lambda r: r.isNotNull())).alias(RECS_COL)
+            ]
+        else:
+            rec_cols = []  # excludes-only spec: the reference emits no records
+        return mid.select(
+            *[F.col(c) for c in keep_cols],
+            F.col(OUTCOME_COL),
+            F.when(F.col(OUTCOME_COL) == OUTCOME_ERROR, F.col(value_col)).alias(RAW_COL),
+            *rec_cols,
+        )
+
+    def records(self, routed: DataFrame) -> DataFrame:
+        """Happy-path view of a routed frame: one row per emitted
+        record (event-split events emit several rows, in block order),
+        after the kept columns."""
+        keep, recs = _split(routed)
+        if RECS_COL in recs:
+            # a non-ok row's record array is NULL -> explode emits no row
+            return routed.select(*keep, F.explode(RECS_COL).alias("__rec")).select(
+                *keep, "__rec.*"
+            )
+        if recs:
+            return routed.filter(F.col(OUTCOME_COL) == OUTCOME_OK).drop(OUTCOME_COL, RAW_COL)
+        return routed.select(*keep).limit(0)
+
+    def errors(self, routed: DataFrame, value_col: str = "value") -> DataFrame:
+        """Rejected view of a routed frame: the kept columns and the raw
+        value (as `value_col`) of every row the reference errors on
+        (HOUE routing)."""
+        return routed.filter(F.col(OUTCOME_COL) == OUTCOME_ERROR).select(
+            *_split(routed)[0], F.col(RAW_COL).alias(value_col)
+        )
+
+    def row_records(self, row: Row) -> list[dict]:
+        """The records of one collected routed row, as dicts."""
+        if row[OUTCOME_COL] != OUTCOME_OK:
+            return []
+        if RECS_COL in row.__fields__:
+            return [r.asDict(recursive=True) for r in row[RECS_COL]]
+        return [{fid: row[fid] for fid, _ in self.output_fields}]
 
     def apply(
         self,
         df: DataFrame,
         value_col: str = "value",
         keep_cols: tuple[str, ...] = (),
-        with_branch: bool = False,
     ) -> DataFrame:
-        """Happy-path output: one row per emitted record (event-split
-        events emit several rows, in block order). Exclusion and error
-        filters are folded into the record-array guard so the whole
-        transform is ONE projection + ONE Generate over the scan."""
-        res, pre = self._prepare(df, value_col, keep_cols)
-
-        keep = F.lit(True)
-        if self.has_excludes:
-            keep = keep & ~self._exclude_cond(res)
-        err = self._error_cond(res)
-        if err is not None:
-            keep = keep & ~err
-
-        branches = self._branches(res)
-        structs: list[Column] = []
-        for i, (app, cols) in enumerate(branches):
-            fields = []
-            for fid, ftype in self.output_fields:
-                if fid in cols:
-                    fields.append(cols[fid].cast(ftype).alias(fid))
-                else:
-                    fields.append(F.lit(None).cast(ftype).alias(fid))
-            if with_branch:
-                fields.append(F.lit(i).alias("__branch"))
-            structs.append(F.when(app, F.struct(*fields)))
-        if not structs:
-            # excludes-only spec: reference emits no records
-            return pre.select(*keep_cols).limit(0)
-        if len(branches) == 1:
-            # one block emits at most one record per event, so the
-            # branch-union Generate is pure overhead: plain filter+select
-            # keeps the whole transform in one WholeStageCodegen span
-            app, cols = branches[0]
-            fields = []
-            for fid, ftype in self.output_fields:
-                src = cols.get(fid)
-                fields.append(
-                    (src.cast(ftype) if src is not None else F.lit(None).cast(ftype)).alias(fid)
-                )
-            if with_branch:
-                fields.append(F.lit(0).alias("__branch"))
-            return pre.filter(keep & app).select(
-                *[F.col(c) for c in keep_cols], *fields
-            )
-        # when `keep` is false the array is NULL -> explode emits no row
-        recs = F.when(keep, F.filter(F.array(*structs), lambda r: r.isNotNull()))
-        out = pre.select(
-            *[F.col(c) for c in keep_cols],
-            F.explode(recs).alias("__rec"),
-        )
-        rec_cols = [f"__rec.{fid}" for fid, _ in self.output_fields]
-        if with_branch:
-            rec_cols.append("__rec.__branch")
-        return out.select(*keep_cols, *rec_cols)
+        """Happy-path output (the records() view of route())."""
+        return self.records(self.route(df, value_col, keep_cols))
 
     def rejected(self, df: DataFrame, value_col: str = "value") -> DataFrame:
-        """Original rows the reference would error on (HOUE routing)."""
-        res, pre = self._prepare(df, value_col, keep_cols=tuple(df.columns))
-        err = self._error_cond(res)
-        if err is None:
-            return df.limit(0)
-        cond = err
-        if self.has_excludes:
-            cond = cond & ~self._exclude_cond(res)
-        return pre.filter(cond).select(*df.columns)
+        """Original rows the reference would error on (the errors() view
+        of route())."""
+        keep = tuple(c for c in df.columns if c != value_col)
+        return self.errors(self.route(df, value_col, keep), value_col).select(*df.columns)
+
+
+def _split(routed: DataFrame) -> tuple[list[str], list[str]]:
+    """(kept columns, record columns) of a routed frame: the columns
+    before its outcome column, and those after its raw-value column."""
+    cols = routed.columns
+    i = cols.index(OUTCOME_COL)
+    return cols[:i], cols[i + 2 :]
 
 
 def compile_transform(spec: Spec | TransformSpec) -> CompiledTransform:

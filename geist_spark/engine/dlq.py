@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class DeadLetterQueue:
@@ -26,25 +26,32 @@ class DeadLetterQueue:
     def add_df(self, bad: DataFrame, value_col: str = "value", reason: str = "") -> int:
         """Append failed raw events; returns the number appended
         (needed for the events_failed metrics counter). Failures are
-        rare, so persist+count+write beats writing empty files."""
-        out = bad.select(
+        rare: an isEmpty probe skips the write (and its empty file) for
+        a clean batch. Callers that read `bad` from a persisted frame
+        scan nothing twice."""
+        if bad.isEmpty():
+            return 0
+        return self._append(bad, value_col, reason)
+
+    def add_event(self, event: str, reason: str = "") -> None:
+        """Single-event convenience (interactive publish path): one
+        row, so no probe."""
+        df = self.spark.createDataFrame([(event,)], "value string").coalesce(1)
+        self._append(df, "value", reason)
+
+    def _append(self, df: DataFrame, value_col: str, reason: str) -> int:
+        """One parquet append; the row count is an Observation on the
+        write itself, not an extra job."""
+        obs = Observation()
+        df.select(
             F.col(value_col).cast("string").alias("value"),
             F.lit(self.stream_id).alias("stream_id"),
             F.lit(reason).alias("reason"),
             F.current_timestamp().alias("ts"),
-        ).persist()
-        try:
-            n = out.count()
-            if n:
-                out.write.mode("append").parquet(self.path)
-        finally:
-            out.unpersist()
-        return n
-
-    def add_event(self, event: str, reason: str = "") -> None:
-        """Single-event convenience (interactive publish path)."""
-        df = self.spark.createDataFrame([(event,)], "value string").coalesce(1)
-        self.add_df(df, reason=reason)
+        ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").parquet(
+            self.path
+        )
+        return int(obs.get["n"])
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.path):

@@ -3,9 +3,12 @@ sink, plus the executor's event-processing semantics.
 
 Mirrors internal/pkg/engine/stream.go:11-36 and executor.go:175-329:
 hooks -> transform -> load-with-retry -> HOUE policy for unretryable
-events. The publish (geistapi) path processes a single-event batch
-synchronously and returns the sink resource id — exactly the
-reference's channel-source ack contract
+events. Both paths route every event once (`CompiledTransform.route`)
+and read the sink records and the rejects from that one routed frame.
+The publish (geistapi) path processes a single-event batch
+synchronously — one collect of the routed row decides error / excluded
+/ load — and returns the sink resource id, exactly the reference's
+channel-source ack contract
 (internal/pkg/entity/channel/extractor.go:46-98).
 """
 
@@ -16,7 +19,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from geist_spark.compiler.transform import CompiledTransform
+from geist_spark.compiler.transform import (
+    OUTCOME_COL,
+    OUTCOME_ERROR,
+    OUTCOME_EXCLUDED,
+    CompiledTransform,
+)
 from geist_spark.engine.hooks import (
     EventHolder,
     HookAction,
@@ -98,18 +106,19 @@ class Stream:
         df = self.spark.createDataFrame(
             [(event, None, None)], EVENT_SCHEMA
         ).coalesce(1)
-        rejected = self.transform.rejected(df).count()
-        if rejected:
+        # one routed row: its outcome and records in a single collect
+        routed = self.transform.route(df)
+        row = routed.collect()[0]
+        if row[OUTCOME_COL] == OUTCOME_ERROR:
             return self._handle_unretryable(event, "transform error (regexp)")
-        out = self.transform.apply(df)
-        rows = out.collect()
-        if not rows:
+        if row[OUTCOME_COL] == OUTCOME_EXCLUDED:
             self.metrics.events_excluded += 1
             return ""  # filtered -> nil,nil (transformer.go:41-43)
+        out = self.transform.records(routed)
 
         # post-transform hook on materialized records (executor.go:216-234)
         if self.post_hook is not None:
-            dicts = [r.asDict(recursive=True) for r in rows]
+            dicts = self.transform.row_records(row)
             action = self.post_hook({"stream_id": self.spec.id}, dicts)
             if action == HookAction.SKIP:
                 return ""
@@ -126,24 +135,31 @@ class Stream:
     def process_batch(self, events_df: DataFrame, value_col: str = "value") -> str:
         """foreachBatch body: transform (+ analytics sections) + load
         one micro-batch. The geistapi single-event publish path skips
-        analytics — dedup/aggregate are stream-level operators."""
+        analytics — dedup/aggregate are stream-level operators.
+
+        The batch is routed once and persisted; under HOUE=fail a
+        rejected event raises before the sink sees any row, under
+        HOUE=dlq the rejects are appended after the sink load."""
         from geist_spark.compiler.analytics import apply_analytics
 
         self.metrics.microbatches += 1
-        out = self.transform.apply(events_df, value_col=value_col)
-        out = apply_analytics(out, self.spec.transform)
-        rid = self._load_with_retry(out, None)
-        bad = self.transform.rejected(events_df, value_col=value_col)
+        ct = self.transform
         houe = self.spec.ops.handling_of_unretryable_events
-        if houe == HOUE_DLQ:
-            # distributed parquet append — no driver-side collect
-            self.metrics.events_failed += self._dlq().add_df(
-                bad, value_col=value_col, reason="transform error"
-            )
-        elif houe == HOUE_FAIL:
-            if bad.take(1):
+        routed = ct.route(events_df, value_col=value_col).persist()
+        try:
+            bad = ct.errors(routed, value_col=value_col)
+            if houe == HOUE_FAIL and not bad.isEmpty():
                 raise UnretryableStreamError(f"unretryable events in {self.spec.id}")
-        return rid
+            out = apply_analytics(ct.records(routed), self.spec.transform)
+            rid = self._load_with_retry(out, None)
+            if houe == HOUE_DLQ:
+                # distributed parquet append — no driver-side collect
+                self.metrics.events_failed += self._dlq().add_df(
+                    bad, value_col=value_col, reason="transform error"
+                )
+            return rid
+        finally:
+            routed.unpersist()
 
     # -- internals ---------------------------------------------------
 

@@ -305,12 +305,15 @@ class KeyedTableLoader(Loader, SinkExtractor):
         ages out of the table once `keep` newer rows exist (the
         bigtable compaction contract for deletion markers).
 
-        The batch pipeline is eagerly checkpointed BEFORE the touched-
-        bucket probe so source transforms run once, not once for the
-        probe and again for the merge; the merged frame is checkpointed
-        again because Spark refuses to overwrite a path it still reads
-        from. Both checkpoints are micro-batch + touched-buckets sized,
-        never the table; per repo cache policy no lazy fragment leaks.
+        The batch pipeline gets a LAZY local checkpoint before the
+        touched-bucket probe: the probe's own job materializes it, so
+        source transforms run once, not once for the probe and again
+        for the merge. The merged frame gets a second lazy checkpoint,
+        materialized by the write job, because Spark refuses to
+        overwrite a path it still reads from. On the first batch (no
+        table, no probe) the write job materializes both. Both
+        checkpoints are micro-batch + touched-buckets sized, never the
+        table.
         """
         self._check_merge_meta(ensure_markers=bool(self.delete_when))
         if self.delete_when:
@@ -324,9 +327,10 @@ class KeyedTableLoader(Loader, SinkExtractor):
         # materialization (distinct over every partition, no limit), so
         # the batch lands in stored blocks inside the probe's own job —
         # one driver action per batch instead of two. On the first
-        # batch (no table yet, no probe) the merged frame's EAGER
-        # checkpoint below materializes the chain in full instead; no
-        # consumer between here and there can partially materialize it.
+        # batch (no table yet, no probe) the write job materializes the
+        # chain in full instead, through the merged frame's lazy
+        # checkpoint below; no consumer between here and there can
+        # partially materialize it.
         out = out.withColumn(
             KEY_BUCKET_COL, self._bucket_of(F.col(ROW_KEY_COL))
         ).localCheckpoint(eager=False)

@@ -9,8 +9,12 @@ Mirrors the reference's executor/supervisor semantics
   README.md:406-415)
 - at-least-once with ack-after-sink: checkpointed micro-batches +
   sink write inside foreachBatch (executor.go:168-170)
-- HOUE policy inside the batch body: discard / dlq table / fail
-  (entity/spec.go:21-26)
+- one pass per micro-batch: the stream is routed once at query start
+  (`CompiledTransform.route`); each batch body persists its routed
+  frame, loads the `records()` view into the sink and appends the
+  `errors()` view to the DLQ, so no event is scanned or parsed twice
+- HOUE policy inside the batch body: discard / dlq table (after the
+  sink load) / fail (before the sink sees any row) (entity/spec.go:21-26)
 - supervisor handles create/replace-on-version-bump/disable/shutdown
   (supervisor.go:154-250)
 """
@@ -228,35 +232,33 @@ class StreamingStream:
                         return
                     raise
 
-        pre_hook, post_hook = self.pre_hook, self.post_hook
+        post_hook = self.post_hook
         stream_id = self.spec.id
 
-        def process(batch_df: DataFrame, epoch_id: int) -> None:
-            from geist_spark.engine.hooks import (
-                apply_post_hook_distributed,
-                apply_pre_hook_distributed,
-            )
+        def process(routed: DataFrame, epoch_id: int) -> None:
+            """One routed micro-batch: persisted once, so the source is
+            scanned and parsed once for the sink and the DLQ (Spark's
+            foreachBatch pattern for several outputs)."""
+            from geist_spark.engine.hooks import apply_post_hook_distributed
 
             self.metrics.microbatches += 1
-            if pre_hook is not None:
-                batch_df = apply_pre_hook_distributed(
-                    batch_df, pre_hook, stream_id, value_col
-                )
-            out = ct.apply(batch_df, value_col=value_col)
-            if post_hook is not None:
-                out = apply_post_hook_distributed(out, post_hook, stream_id)
-            load_with_retry(out, epoch_id)
-            bad = ct.rejected(batch_df, value_col=value_col)
-            if houe == HOUE_DLQ:
-                # distributed parquet append — no driver-side collect
-                self.metrics.events_failed += self.dlq.add_df(
-                    bad, value_col=value_col, reason="transform error"
-                )
-            elif houe == HOUE_FAIL:
-                if bad.take(1):
-                    raise RuntimeError(
-                        f"unretryable events in stream {self.spec.id}"
+            routed.persist()
+            try:
+                bad = ct.errors(routed, value_col=value_col)
+                if houe == HOUE_FAIL and not bad.isEmpty():
+                    # before the sink sees any row of the batch
+                    raise RuntimeError(f"unretryable events in stream {stream_id}")
+                out = ct.records(routed)
+                if post_hook is not None:
+                    out = apply_post_hook_distributed(out, post_hook, stream_id)
+                load_with_retry(out, epoch_id)
+                if houe == HOUE_DLQ:
+                    # after the sink load; distributed parquet append
+                    self.metrics.events_failed += self.dlq.add_df(
+                        bad, value_col=value_col, reason="transform error"
                     )
+            finally:
+                routed.unpersist()
 
         checkpoint = os.path.join(
             self.checkpoint_root or tempfile.mkdtemp(prefix="geist_ckpt_"),
@@ -325,7 +327,16 @@ class StreamingStream:
                     .start()
                 )
         else:
-            writer = source.writeStream.foreachBatch(process)
+            if self.pre_hook is not None:
+                from geist_spark.engine.hooks import apply_pre_hook_distributed
+
+                source = apply_pre_hook_distributed(
+                    source, self.pre_hook, stream_id, value_col
+                )
+            # route once, at query start: every batch reuses the plan
+            writer = ct.route(source, value_col=value_col).writeStream.foreachBatch(
+                process
+            )
         self.query = (
             writer.option("checkpointLocation", checkpoint)
             .trigger(processingTime=f"{self.spec.ops.micro_batch_timeout_ms} milliseconds"

@@ -54,9 +54,10 @@ def _regexp_transform(expression, input_format):
 
 
 def run(spark, transform, event):
+    """-> (records, number of rejected events) from one routed frame."""
     ct = compile_transform(parse_spec(spec_with_transform(transform)))
-    df = event_df(spark, event)
-    return [r.asDict() for r in ct.apply(df).collect()], ct.rejected(df).count()
+    routed = ct.route(event_df(spark, event))
+    return [r.asDict() for r in ct.records(routed).collect()], ct.errors(routed).count()
 
 
 def test_access_log_golden(spark):

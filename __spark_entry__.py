@@ -4150,11 +4150,10 @@ def w_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p_decompress_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transparent decompression under the oracle gate: each doc's
     text is compressed with the codec picked by doc_id % 8 — gzip,
-    zlib, bzip2, xz (stdlib decode paths), TWO zstd shapes from the
-    paired RFC 8878 encoder (default frames, and a path-diverse
-    frame: FSE-compressed sequence tables, 4-stream literals,
-    FSE-compressed Huffman weights, leading skippable frame), an LZ4
-    frame with block checksums, and a framed-Snappy stream
+    zlib, bzip2, xz (stdlib decode paths), TWO zstd shapes (a
+    default pyarrow frame, and a level-19 frame behind a leading
+    skippable frame), a multi-block LZ4 frame whose linked blocks
+    match back into earlier blocks, and a framed-Snappy stream
     (operators/lzcodecs.py) — and fed through prep.decompress_text.
     The oracle is the IDENTITY on documents (text + byte length): a
     header-walk, multi-member, bounded-inflate, entropy-decode,
@@ -4163,17 +4162,26 @@ def p_decompress_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     import bz2 as _bz2
     import gzip as _gzip
     import lzma as _lzma
+    import struct as _struct
     import zlib as _zlib
 
     import pandas as _pd
+    import pyarrow as _pa
 
     from geist_spark.operators.lzcodecs import (
-        lz4_compress as _lz4c,
         snappy_stream_compress as _snapc,
     )
     from geist_spark.operators.prep import decompress_text
-    from geist_spark.operators.zstd import compress as _zc
-    from geist_spark.operators.zstd import skippable_frame as _zskip
+
+    def lz4_linked(raw):
+        # each flush closes an LZ4F block; the default linked-block
+        # mode lets later blocks match into earlier ones
+        sink = _pa.BufferOutputStream()
+        with _pa.CompressedOutputStream(sink, "lz4") as out:
+            for i in range(0, len(raw), 64):
+                out.write(raw[i : i + 64])
+                out.flush()
+        return sink.getvalue().to_pybytes()
 
     docs = _t(spark, sf_dir, "documents")
     codecs = [
@@ -4181,15 +4189,10 @@ def p_decompress_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         _zlib.compress,
         _bz2.compress,
         _lzma.compress,  # FORMAT_XZ default
-        _zc,
-        lambda raw: _zskip(b"seek-index") + _zc(
-            raw,
-            seq_mode="fse",
-            four_stream=True,
-            fse_weights=True,
-            block_bytes=4096,
-        ),
-        lambda raw: _lz4c(raw, block_checksum=True, block_bytes=4096),
+        lambda raw: _pa.compress(raw, codec="zstd", asbytes=True),
+        lambda raw: _struct.pack("<II", 0x184D2A50, 10) + b"seek-index"
+        + _pa.Codec("zstd", 19).compress(raw, asbytes=True),
+        lz4_linked,
         _snapc,
     ]
 
@@ -4218,7 +4221,7 @@ def w_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ENTIRELY JVM-side (concat + octet_length build the exact
     Content-Length headers), wrapped in the transport picked by
     doc_id % 3 — plain, gzip member, zstd frame (the CommonCrawl
-    .warc.zst layout, paired RFC 8878 encoder) — then parsed by
+    .warc.zst layout, pyarrow's zstd) — then parsed by
     web.warc_parse. The oracle does NO WARC parsing — every field is
     an analytic string function of (doc_id, text): fixed template
     lengths + byte length of the text, md5 of the reconstructed
@@ -4256,8 +4259,7 @@ def w_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip as _gzip
 
     import pandas as _pd
-
-    from geist_spark.operators.zstd import compress as _zc
+    import pyarrow as _pa
 
     def transport(batches):
         for pdf in batches:
@@ -4270,7 +4272,9 @@ def w_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
                         else (
                             _gzip.compress(bytes(p), mtime=0)
                             if fid % 3 == 1
-                            else _zc(bytes(p))
+                            else _pa.compress(
+                                bytes(p), codec="zstd", asbytes=True
+                            )
                         )
                         for fid, p in zip(pdf["file_id"], pdf["payload"])
                     ],
@@ -4317,8 +4321,8 @@ def w_avro_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro container ingestion under the oracle gate (operators/
     avro.py): each doc becomes a 2-record Object Container File with
     the codec picked by doc_id % 4 — null, deflate, snappy (raw
-    block + big-endian CRC32 suffix, via the from-scratch lzcodecs
-    snappy), zstandard (via the RFC 8878 codec) — holding longs,
+    block + big-endian CRC32 suffix), zstandard (both through
+    pyarrow's codecs) — holding longs,
     md5-hex strings, booleans, a string array, a null|string union,
     an enum and base64 bytes. The reader's JSON rendering is the
     documented dialect (compact, schema order, unions unwrapped);

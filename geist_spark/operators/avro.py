@@ -6,9 +6,10 @@ Avro container files are the lingua franca of data-lake ingestion
 no external jar here — this is a from-scratch binary decoder: header
 metadata map, sync-marker framing, zigzag-varint primitives, records /
 enums / arrays / maps / unions / fixed, and the standard block codecs
-(null, deflate via raw zlib, snappy with its 4-byte big-endian CRC32
-suffix via operators/lzcodecs.py, zstandard via operators/zstd.py,
-bzip2/xz via stdlib).
+(null, deflate via raw zlib; snappy with its 4-byte big-endian CRC32
+suffix, zstandard, and bzip2/xz through operators/lzcodecs.py — the
+pyarrow-native Snappy/zstd decoders and the bounded stdlib bz2/lzma
+stream walk).
 
 Decoded datums surface as deterministic JSON strings (compact
 separators, schema field order, bytes/fixed as base64, unions
@@ -37,7 +38,10 @@ import lzma
 import struct
 import zlib
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from geist_spark.operators import lzcodecs
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -203,35 +207,19 @@ def _decompress_block(codec: str, block: bytes, max_bytes: int) -> bytes:
             raise _err("deflate block exceeds max_bytes or truncated")
         return out
     if codec == "snappy":
-        from geist_spark.operators.lzcodecs import snappy_decompress
-
         if len(block) < 4:
             raise _err("snappy block missing CRC32 suffix")
-        out = snappy_decompress(block[:-4], max_bytes)
+        out = lzcodecs.snappy_decompress(block[:-4], max_bytes)
         want = struct.unpack(">I", block[-4:])[0]
         if zlib.crc32(out) & 0xFFFFFFFF != want:
             raise _err("snappy block CRC32 mismatch")
         return out
     if codec == "zstandard":
-        from geist_spark.operators.zstd import decompress as zstd_d
-
-        return zstd_d(block, max_bytes=max_bytes)
-    if codec == "bzip2":
-        try:
-            out = bz2.decompress(block)
-        except OSError as exc:
-            raise _err(f"bzip2 block: {exc}") from None
-        if len(out) > max_bytes:
-            raise _err("bzip2 block exceeds max_bytes")
-        return out
-    if codec == "xz":
-        try:
-            out = lzma.decompress(block)
-        except lzma.LZMAError as exc:
-            raise _err(f"xz block: {exc}") from None
-        if len(out) > max_bytes:
-            raise _err("xz block exceeds max_bytes")
-        return out
+        return lzcodecs.zstd_decompress(block, max_bytes=max_bytes)
+    if codec in ("bzip2", "xz"):
+        return lzcodecs.inflate_bx(
+            block, "bz2" if codec == "bzip2" else "xz", max_bytes
+        )
     raise NotImplementedError(
         f"Avro codec {codec!r} unsupported (null/deflate/snappy/"
         "zstandard/bzip2/xz are implemented)"
@@ -491,15 +479,11 @@ def avro_build(
         if codec == "deflate":
             comp = zlib.compress(body)[2:-4]  # raw deflate
         elif codec == "snappy":
-            from geist_spark.operators.lzcodecs import snappy_compress
-
-            comp = snappy_compress(body) + struct.pack(
-                ">I", zlib.crc32(body) & 0xFFFFFFFF
-            )
+            comp = pa.compress(
+                body, codec="snappy", asbytes=True
+            ) + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
         elif codec == "zstandard":
-            from geist_spark.operators.zstd import compress as zstd_c
-
-            comp = zstd_c(body)
+            comp = pa.compress(body, codec="zstd", asbytes=True)
         elif codec == "bzip2":
             comp = bz2.compress(body)
         elif codec == "xz":

@@ -9,7 +9,7 @@ bits, CRC-8/CRC-16 verification — so FLAC rows flow through the same
 exact-integer loudness reductions as WAV in
 multimodal.decode_audio_real.
 
-The paired encoder (the jpeg.py / zstd.py doctrine) writes real FLAC
+The paired encoder (the jpeg.py doctrine) writes real FLAC
 streams — constant / verbatim / fixed-predictor subframes, Rice
 coding with per-partition parameters and raw-escape partitions, the
 stereo transforms, wasted-bit shifting — and every fixture frame is

@@ -1,94 +1,50 @@
-"""LZ4 and Snappy codecs, from scratch, with paired encoders.
+"""Compressed-payload decoders for crawl and data-lake ingestion:
+zstd frames (0xFD2FB528 — CommonCrawl .warc.zst, Avro "zstandard"),
+LZ4 frames (0x184D2204 — log shippers, Kafka, .lz4 artifacts), raw
+Snappy blocks (Avro/Parquet/Kafka) and framed Snappy (the sNaPpY
+stream format), plus the bounded bzip2/xz stream walk.
 
-Closes the last common compressed-payload magics in crawl/data-lake
-ingestion after zstd.py: LZ4 frames (0x184D2204 — log shippers, Kafka,
-.lz4 artifacts) and Snappy (the framed stream format sNaPpY, plus the
-raw block format that Avro/Parquet/Kafka embed). Pure Python; wired
-into prep.decompress_text for the framed formats and consumed by the
-Avro container reader for raw blocks.
+The codecs are the native builds pyarrow ships (libzstd, liblz4,
+snappy) and the stdlib's bz2/lzma; this module holds the repo
+contract around them, for prep.decompress_text, web.warc_parse and
+the Avro block codecs:
 
-All decodes are BOUNDED by max_bytes (decompression bombs raise the
-typed malformed ValueError before materializing — the PNG-IDAT rule).
-Checksums are verified where the format carries them: xxHash32 for
-LZ4 frame content/header checksums, masked CRC-32C for framed Snappy
-— both implemented here and pinned to published check values in
-tests. Two-tier errors: ValueError = malformed, NotImplementedError =
-declared capability limit (LZ4 dictionary frames).
+- Every decode is BOUNDED by max_bytes: frame codecs stream through
+  pyarrow's CompressedInputStream and read at most max_bytes + 1
+  bytes, raw Snappy rejects its declared length before decoding, and
+  bz2/xz decompressors get max_length. A decompression bomb raises
+  the typed malformed ValueError naming max_bytes, never OOMs an
+  executor (the PNG-IDAT rule).
+- Two-tier errors: ValueError("malformed <codec> payload: ...") for
+  anything the library rejects (truncation, corruption, checksum
+  mismatch, trailing garbage); NotImplementedError for dictionary
+  frames, a declared capability limit (crawl archives are
+  self-contained frames). libzstd reports a dictionary frame as
+  "Dictionary mismatch"; liblz4 would silently return nothing for
+  one, so the FLG DictID bit is checked here.
+- Multi-frame concatenation, skippable frames and the zstd/LZ4
+  checksums are the libraries' own behaviour.
 
-Paired encoders emit real frames (greedy hash matching, both literal
-and match sequences, the frame/stream wrappers) and every encode is
-self-checked through the decoder — the jpeg/zstd/flac doctrine.
+Framed Snappy's chunk walk and its masked CRC-32C stay in Python: no
+native CRC-32C is installed.
 """
 
 from __future__ import annotations
 
+import bz2
+import lzma
 import struct
-import zlib
 
+import pyarrow as pa
+
+ZSTD_MAGIC = 0xFD2FB528
 LZ4_MAGIC = 0x184D2204
+SKIPPABLE_MAGIC = 0x184D2A50  # low nibble free: 0x184D2A50..5F
 SNAPPY_STREAM_MAGIC = b"\xff\x06\x00\x00sNaPpY"
 
 
 def _err(what: str, msg: str) -> ValueError:
     return ValueError(f"malformed {what} payload: {msg}")
-
-
-# ---------------------------------------------------------------------------
-# xxHash32 (LZ4 frame checksums)
-
-_XP1 = 0x9E3779B1
-_XP2 = 0x85EBCA77
-_XP3 = 0xC2B2AE3D
-_XP4 = 0x27D4EB2F
-_XP5 = 0x165667B1
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    n = len(data)
-    pos = 0
-    if n >= 16:
-        v1 = (seed + _XP1 + _XP2) & _M32
-        v2 = (seed + _XP2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _XP1) & _M32
-        lim = n - 16
-        while pos <= lim:
-            for i in range(4):
-                lane = struct.unpack_from("<I", data, pos + 4 * i)[0]
-                v = (v1, v2, v3, v4)[i]
-                v = _rotl32((v + lane * _XP2) & _M32, 13) * _XP1 & _M32
-                if i == 0:
-                    v1 = v
-                elif i == 1:
-                    v2 = v
-                elif i == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            pos += 16
-        h = (_rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12)
-             + _rotl32(v4, 18)) & _M32
-    else:
-        h = (seed + _XP5) & _M32
-    h = (h + n) & _M32
-    while pos + 4 <= n:
-        lane = struct.unpack_from("<I", data, pos)[0]
-        h = (_rotl32((h + lane * _XP3) & _M32, 17) * _XP4) & _M32
-        pos += 4
-    while pos < n:
-        h = (_rotl32((h + data[pos] * _XP5) & _M32, 11) * _XP1) & _M32
-        pos += 1
-    h ^= h >> 15
-    h = (h * _XP2) & _M32
-    h ^= h >> 13
-    h = (h * _XP3) & _M32
-    h ^= h >> 16
-    return h
 
 
 # ---------------------------------------------------------------------------
@@ -114,156 +70,78 @@ def _snappy_mask(crc: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block format
+# zstd / LZ4 frames
 
 
-def lz4_block_decompress(b: bytes, max_bytes: int) -> bytes:
-    out = bytearray()
-    i, n = 0, len(b)
-    while i < n:
-        token = b[i]
-        i += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                if i >= n:
-                    raise _err("lz4", "truncated literal length")
-                lit += b[i]
-                i += 1
-                if b[i - 1] != 255:
-                    break
-        if i + lit > n:
-            raise _err("lz4", "literal run past block end")
-        if len(out) + lit > max_bytes:
-            raise _err("lz4", f"output exceeds max_bytes={max_bytes}")
-        out += b[i : i + lit]
-        i += lit
-        if i == n:
-            break  # last sequence carries literals only
-        if i + 2 > n:
-            raise _err("lz4", "truncated match offset")
-        offset = b[i] | (b[i + 1] << 8)
-        i += 2
-        if offset == 0 or offset > len(out):
-            raise _err("lz4", "match offset outside window")
-        mlen = (token & 0xF) + 4
-        if (token & 0xF) == 15:
-            while True:
-                if i >= n:
-                    raise _err("lz4", "truncated match length")
-                mlen += b[i]
-                i += 1
-                if b[i - 1] != 255:
-                    break
-        if len(out) + mlen > max_bytes:
-            raise _err("lz4", f"output exceeds max_bytes={max_bytes}")
-        if offset >= mlen:
-            start = len(out) - offset
-            out += out[start : start + mlen]
-        else:
-            start = len(out) - offset
-            for k in range(mlen):
-                out.append(out[start + k])
-    return bytes(out)
+def _first_frame(b: bytes, what: str, magic: int) -> int:
+    """Offset of the first frame descriptor after any leading
+    skippable frames; that frame must carry `magic`."""
+    pos = 0
+    while True:
+        if len(b) - pos < 4:
+            raise _err(what, f"payload contains no {what} frame")
+        m = struct.unpack_from("<I", b, pos)[0]
+        if m >> 4 != SKIPPABLE_MAGIC >> 4:
+            break
+        if len(b) - pos < 8:
+            raise _err(what, "truncated skippable frame")
+        pos += 8 + struct.unpack_from("<I", b, pos + 4)[0]
+    if m != magic:
+        raise _err(what, f"bad frame magic 0x{m:08x}")
+    if len(b) - pos < 5:
+        raise _err(what, "truncated frame descriptor")
+    return pos + 4
+
+
+def _dictionary_limit(what: str, detail: str) -> NotImplementedError:
+    return NotImplementedError(
+        f"{what} frame requires an external dictionary ({detail}) — "
+        "dictionary frames are a capability limit; crawl archives use "
+        "self-contained frames"
+    )
+
+
+def _read_frames(b: bytes, codec: str, max_bytes: int) -> bytes:
+    try:
+        with pa.CompressedInputStream(pa.BufferReader(b), codec) as stream:
+            out = stream.read(max_bytes + 1)
+    except (OSError, pa.ArrowInvalid) as exc:
+        if "Dictionary mismatch" in str(exc):
+            raise _dictionary_limit(codec, str(exc)) from None
+        raise _err(codec, str(exc)) from None
+    if len(out) > max_bytes:
+        raise _err(codec, f"output exceeds max_bytes={max_bytes}")
+    return out
+
+
+def zstd_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
+    """Decode a zstd payload: one or more concatenated frames,
+    skippable frames ignored, content checksums verified."""
+    pos = _first_frame(b, "zstd", ZSTD_MAGIC)
+    fhd = b[pos]
+    at = pos + (1 if fhd & 0x20 else 2)  # single-segment: no window byte
+    did = int.from_bytes(b[at : at + (0, 1, 2, 4)[fhd & 3]], "little")
+    if did:
+        raise _dictionary_limit("zstd", f"Dictionary_ID={did}")
+    return _read_frames(b, "zstd", max_bytes)
 
 
 def lz4_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
-    """LZ4 FRAME decode (v1.6.x frame spec): FLG/BD descriptor,
-    optional content size, block checksums, content checksum,
-    skippable frames, frame concatenation. Dictionary frames are a
-    capability limit."""
-    out = bytearray()
-    pos = 0
-    saw = False
-    while pos < len(b):
-        if len(b) - pos < 4:
-            raise _err("lz4", "truncated frame magic")
-        magic = struct.unpack_from("<I", b, pos)[0]
-        if 0x184D2A50 <= magic <= 0x184D2A5F:  # skippable
-            if len(b) - pos < 8:
-                raise _err("lz4", "truncated skippable frame")
-            size = struct.unpack_from("<I", b, pos + 4)[0]
-            pos += 8 + size
-            continue
-        if magic != LZ4_MAGIC:
-            raise _err("lz4", f"bad frame magic 0x{magic:08x}")
-        saw = True
-        pos += 4
-        if pos + 2 > len(b):
-            raise _err("lz4", "truncated frame descriptor")
-        desc_start = pos
-        flg = b[pos]
-        pos += 2  # FLG + BD
-        if flg >> 6 != 0b01:
-            raise _err("lz4", "unsupported frame version")
-        b_checksum = bool(flg & 0x10)
-        c_size = bool(flg & 0x08)
-        c_checksum = bool(flg & 0x04)
-        if flg & 0x01:
-            raise NotImplementedError(
-                "LZ4 dictionary frame — external dictionaries are a "
-                "capability limit"
-            )
-        expected = None
-        if c_size:
-            expected = struct.unpack_from("<Q", b, pos)[0]
-            pos += 8
-        hc = b[pos]
-        pos += 1
-        if (xxh32(b[desc_start:pos - 1]) >> 8) & 0xFF != hc:
-            raise _err("lz4", "frame descriptor checksum mismatch")
-        frame_start = len(out)
-        while True:
-            if pos + 4 > len(b):
-                raise _err("lz4", "truncated block size")
-            bsize = struct.unpack_from("<I", b, pos)[0]
-            pos += 4
-            if bsize == 0:
-                break  # EndMark
-            raw = bool(bsize & 0x80000000)
-            bsize &= 0x7FFFFFFF
-            if pos + bsize > len(b):
-                raise _err("lz4", "block past payload end")
-            block = b[pos : pos + bsize]
-            pos += bsize
-            if b_checksum:
-                want = struct.unpack_from("<I", b, pos)[0]
-                pos += 4
-                if xxh32(block) != want:
-                    raise _err("lz4", "block checksum mismatch")
-            if raw:
-                if len(out) + bsize > max_bytes:
-                    raise _err(
-                        "lz4", f"output exceeds max_bytes={max_bytes}"
-                    )
-                out += block
-            else:
-                out += lz4_block_decompress(
-                    block, max_bytes - len(out)
-                )
-        if c_checksum:
-            if pos + 4 > len(b):
-                raise _err("lz4", "truncated content checksum")
-            want = struct.unpack_from("<I", b, pos)[0]
-            pos += 4
-            if xxh32(bytes(out[frame_start:])) != want:
-                raise _err("lz4", "content checksum mismatch")
-        if expected is not None and len(out) - frame_start != expected:
-            raise _err("lz4", "content size mismatch")
-    if not saw:
-        raise _err("lz4", "payload contains no LZ4 frame")
-    return bytes(out)
+    """Decode an LZ4 frame payload (linked or independent blocks,
+    frame concatenation, skippable frames, block/content checksums
+    verified)."""
+    if b[_first_frame(b, "lz4", LZ4_MAGIC)] & 0x01:
+        raise _dictionary_limit("lz4", "FLG DictID set")
+    return _read_frames(b, "lz4", max_bytes)
 
 
 # ---------------------------------------------------------------------------
-# Snappy raw block format
+# Snappy
 
 
 def snappy_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
     """Raw Snappy block decode (the format Avro/Parquet embed)."""
-    total = 0
-    shift = 0
-    i = 0
+    total = shift = i = 0
     while True:
         if i >= len(b):
             raise _err("snappy", "truncated length varint")
@@ -277,57 +155,12 @@ def snappy_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
             raise _err("snappy", "length varint too long")
     if total > max_bytes:
         raise _err("snappy", f"output exceeds max_bytes={max_bytes}")
-    out = bytearray()
-    n = len(b)
-    while i < n:
-        tag = b[i]
-        i += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59
-                if i + extra > n:
-                    raise _err("snappy", "truncated literal length")
-                ln = int.from_bytes(b[i : i + extra], "little")
-                i += extra
-            ln += 1
-            if i + ln > n:
-                raise _err("snappy", "literal past payload end")
-            out += b[i : i + ln]
-            i += ln
-        else:
-            if kind == 1:  # copy, 1-byte offset
-                ln = ((tag >> 2) & 0x7) + 4
-                if i >= n:
-                    raise _err("snappy", "truncated copy offset")
-                offset = ((tag >> 5) << 8) | b[i]
-                i += 1
-            elif kind == 2:  # copy, 2-byte offset
-                ln = (tag >> 2) + 1
-                if i + 2 > n:
-                    raise _err("snappy", "truncated copy offset")
-                offset = b[i] | (b[i + 1] << 8)
-                i += 2
-            else:  # copy, 4-byte offset
-                ln = (tag >> 2) + 1
-                if i + 4 > n:
-                    raise _err("snappy", "truncated copy offset")
-                offset = struct.unpack_from("<I", b, i)[0]
-                i += 4
-            if offset == 0 or offset > len(out):
-                raise _err("snappy", "copy offset outside window")
-            if len(out) + ln > total:
-                raise _err("snappy", "copy overruns declared length")
-            start = len(out) - offset
-            if offset >= ln:
-                out += out[start : start + ln]
-            else:
-                for k in range(ln):
-                    out.append(out[start + k])
-    if len(out) != total:
-        raise _err("snappy", "decoded length differs from declared")
-    return bytes(out)
+    try:
+        return pa.decompress(
+            b, decompressed_size=total, codec="snappy", asbytes=True
+        )
+    except (OSError, pa.ArrowInvalid) as exc:
+        raise _err("snappy", str(exc)) from None
 
 
 def snappy_stream_decompress(
@@ -378,208 +211,50 @@ def snappy_stream_decompress(
     return bytes(out)
 
 
-# ---------------------------------------------------------------------------
-# Paired encoders
-
-
-def _greedy_matches(data: bytes, min_match: int):
-    """Shared greedy matcher: yields (lit_start, lit_end, match_len,
-    offset) with a trailing literal-only tail."""
-    table: dict = {}
-    i = anchor = 0
-    n = len(data)
-    seqs = []
-    while i + min_match <= n:
-        key = data[i : i + min_match]
-        cand = table.get(key)
-        table[key] = i
-        if cand is None or i - cand > 65535:
-            i += 1
-            continue
-        mlen = min_match
-        while i + mlen < n and data[cand + mlen] == data[i + mlen]:
-            mlen += 1
-        seqs.append((anchor, i, mlen, i - cand))
-        i += mlen
-        anchor = i
-    return seqs, anchor
-
-
-def lz4_block_compress(data: bytes) -> bytes:
-    out = bytearray()
-    seqs, tail = _greedy_matches(data, 4)
-    # LZ4 end-of-block rules: last 5 bytes are always literals and the
-    # last match must start 12+ bytes before the end — demote late
-    # matches to literals
-    kept = []
-    for ls, le, ml, off in seqs:
-        if le + ml > len(data) - 5 or le > len(data) - 12:
-            tail = min(tail, ls)
-            break
-        kept.append((ls, le, ml, off))
-    if kept:
-        tail = max(tail, kept[-1][1] + kept[-1][2])
-    else:
-        tail = 0
-
-    def put_len(first: int, ln: int, shift: int) -> bytes:
-        if ln < 15:
-            return bytes([first | (ln << shift if shift else ln)])
-        extra = bytearray([first | (15 << shift if shift else 15)])
-        ln -= 15
-        while ln >= 255:
-            extra.append(255)
-            ln -= 255
-        extra.append(ln)
-        return bytes(extra)
-
-    for ls, le, ml, off in kept:
-        lit = data[ls:le]
-        token_lit = min(len(lit), 15)
-        token_ml = min(ml - 4, 15)
-        out.append((token_lit << 4) | token_ml)
-        if token_lit == 15:
-            ln = len(lit) - 15
-            while ln >= 255:
-                out.append(255)
-                ln -= 255
-            out.append(ln)
-        out += lit
-        out += struct.pack("<H", off)
-        if token_ml == 15:
-            ln = ml - 4 - 15
-            while ln >= 255:
-                out.append(255)
-                ln -= 255
-            out.append(ln)
-    lit = data[tail:]
-    token_lit = min(len(lit), 15)
-    out.append(token_lit << 4)
-    if token_lit == 15:
-        ln = len(lit) - 15
-        while ln >= 255:
-            out.append(255)
-            ln -= 255
-        out.append(ln)
-    out += lit
+def snappy_stream_compress(data: bytes) -> bytes:
+    """Framed-Snappy writer (sNaPpY stream): one compressed chunk per
+    64 KiB of input (the format's chunk limit), each block from
+    pyarrow's Snappy."""
+    out = bytearray(SNAPPY_STREAM_MAGIC)
+    for off in range(0, len(data), 65536):
+        chunk = data[off : off + 65536]
+        body = struct.pack("<I", _snappy_mask(crc32c(chunk))) + pa.compress(
+            chunk, codec="snappy", asbytes=True
+        )
+        out += b"\x00" + len(body).to_bytes(3, "little") + body
     return bytes(out)
 
 
-def lz4_compress(
-    data: bytes,
-    *,
-    block_bytes: int = 4 * 1024 * 1024,
-    block_checksum: bool = False,
-    content_checksum: bool = True,
-    content_size: bool = True,
-    store: bool = False,
-) -> bytes:
-    """Paired LZ4 frame writer; self-checked through the decoder."""
-    out = bytearray(struct.pack("<I", LZ4_MAGIC))
-    flg = (0b01 << 6) | (0x08 if content_size else 0) | (
-        0x04 if content_checksum else 0
-    ) | (0x10 if block_checksum else 0)
-    bd = 0x70  # 4 MiB max block size
-    desc = bytearray([flg, bd])
-    if content_size:
-        desc += struct.pack("<Q", len(data))
-    out += desc
-    out.append((xxh32(bytes(desc)) >> 8) & 0xFF)
-    for off in range(0, max(len(data), 1), block_bytes):
-        chunk = data[off : off + block_bytes]
-        if not chunk and off:
-            break
-        comp = None if store else lz4_block_compress(chunk)
-        if comp is not None and len(comp) < len(chunk):
-            out += struct.pack("<I", len(comp))
-            block = comp
-        else:
-            out += struct.pack("<I", 0x80000000 | len(chunk))
-            block = chunk
-        out += block
-        if block_checksum:
-            out += struct.pack("<I", xxh32(block))
-    out += struct.pack("<I", 0)  # EndMark
-    if content_checksum:
-        out += struct.pack("<I", xxh32(data))
-    blob = bytes(out)
-    if lz4_decompress(blob, max_bytes=len(data) + 65536) != data:
-        raise AssertionError("paired LZ4 encoder self-check failed")
-    return blob
+# ---------------------------------------------------------------------------
+# bzip2 / xz
 
 
-def snappy_compress(data: bytes, *, store: bool = False) -> bytes:
-    """Paired raw-Snappy writer; self-checked through the decoder."""
-    out = bytearray()
-    total = len(data)
-    while True:
-        out.append((total & 0x7F) | (0x80 if total > 0x7F else 0))
-        total >>= 7
-        if not total:
-            break
-
-    def emit_literal(lit: bytes):
-        ln = len(lit) - 1
-        if ln < 60:
-            out.append(ln << 2)
-        else:
-            nb = (ln.bit_length() + 7) // 8
-            out.append((59 + nb) << 2)
-            out.extend(ln.to_bytes(nb, "little"))
-        out.extend(lit)
-
-    if store or len(data) < 5:
-        if data:
-            emit_literal(data)
-    else:
-        seqs, tail = _greedy_matches(data, 4)
-        pos = 0
-        for ls, le, ml, off in seqs:
-            if ls < pos:
-                continue
-            if le > ls:
-                emit_literal(data[ls:le])
-            rem = ml
-            while rem:
-                ln = min(rem, 64)
-                if ln < 4:
-                    # too-short remainder: write as literal instead
-                    emit_literal(data[le + ml - rem : le + ml])
-                    break
-                if 4 <= ln <= 11 and off < 2048:
-                    out.append(1 | ((ln - 4) << 2) | ((off >> 8) << 5))
-                    out.append(off & 0xFF)
-                else:
-                    out.append(2 | ((ln - 1) << 2))
-                    out += struct.pack("<H", off)
-                rem -= ln
-            pos = le + ml
-        if tail < len(data) and tail >= pos:
-            emit_literal(data[tail:])
-    blob = bytes(out)
-    if snappy_decompress(blob, max_bytes=len(data) + 65536) != data:
-        raise AssertionError("paired Snappy encoder self-check failed")
-    return blob
-
-
-def snappy_stream_compress(
-    data: bytes, chunk_bytes: int = 65536
-) -> bytes:
-    """Paired framed-Snappy writer (sNaPpY stream)."""
-    out = bytearray(SNAPPY_STREAM_MAGIC)
-    for off in range(0, max(len(data), 1), chunk_bytes):
-        chunk = data[off : off + chunk_bytes]
-        if not chunk and off:
-            break
-        crc = _snappy_mask(crc32c(chunk))
-        comp = snappy_compress(chunk)
-        if len(comp) < len(chunk):
-            body = struct.pack("<I", crc) + comp
-            out += bytes([0x00]) + len(body).to_bytes(3, "little") + body
-        else:
-            body = struct.pack("<I", crc) + chunk
-            out += bytes([0x01]) + len(body).to_bytes(3, "little") + body
-    blob = bytes(out)
-    if snappy_stream_decompress(blob, max_bytes=len(data) + 65536) != data:
-        raise AssertionError("paired framed-Snappy self-check failed")
-    return blob
+def inflate_bx(b: bytes, codec: str, max_bytes: int) -> bytes:
+    """bzip2 (codec 'bz2') or xz: one stdlib decompressor per
+    concatenated stream (pbzip2 / multi-stream xz with stream
+    padding), each asked for at most the remaining budget + 1 bytes,
+    so a bomb stops at max_bytes + 1 of output."""
+    parts, data, budget = [], b, max_bytes
+    while data:
+        d = (
+            bz2.BZ2Decompressor()
+            if codec == "bz2"
+            else lzma.LZMADecompressor(lzma.FORMAT_XZ)
+        )
+        try:
+            chunk = d.decompress(data, budget + 1)
+        except (OSError, lzma.LZMAError) as exc:
+            raise _err(codec, str(exc)) from None
+        parts.append(chunk)
+        budget -= len(chunk)
+        if budget < 0:
+            raise ValueError(
+                f"compressed payload inflates past max_bytes={max_bytes}"
+            )
+        if not d.eof:
+            raise ValueError("truncated compressed payload")
+        data = d.unused_data
+        if codec == "xz":
+            # xz stream padding: NUL runs between streams are legal
+            data = data.lstrip(b"\x00")
+    return b"".join(parts)

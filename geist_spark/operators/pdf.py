@@ -32,10 +32,10 @@ Scope:
   password — the owner-locked-but-world-readable PDFs that dominate
   real crawls — decrypt transparently across ALL mainstream
   schemes: RC4 V 1/2 R 2/3 (Algorithms 1-5, stdlib MD5 +
-  from-scratch RC4), AES-128 via the V4 /StdCF AESV2 crypt filter,
+  OpenSSL RC4), AES-128 via the V4 /StdCF AESV2 crypt filter,
   and AES-256 AESV3 (V5 R5/6, the ISO 32000-2 Algorithm 2.B SHA-2
-  KDF + /UE key unwrap; from-scratch T-table AES pinned by FIPS-197
-  vectors); non-Standard handlers, split string/stream crypt
+  KDF + /UE key unwrap; OpenSSL AES via `cryptography`, pinned by
+  FIPS-197 / SP 800-38A vectors); non-Standard handlers, split string/stream crypt
   filters, and non-empty user passwords stay capability limits,
 - text assembly from BT/ET blocks: Tj / TJ / ' / " shows; Td / TD /
   T* / BT open a new output line (only when the current line is
@@ -54,6 +54,8 @@ from __future__ import annotations
 import re
 import struct
 
+from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 from pyspark.sql import DataFrame
 
 PDF_TEXT_SCHEMA = "file_id long, page int, text string, n_chars int"
@@ -309,27 +311,14 @@ _PW_PAD = bytes([
 ])
 
 
-try:  # native fast path (same bytes; RC4 output is standardized)
-    from cryptography.hazmat.decrepit.ciphers.algorithms import (
-        ARC4 as _ARC4,
-    )
-    from cryptography.hazmat.primitives.ciphers import Cipher as _Cipher
-except ImportError:  # pragma: no cover - environment without the lib
-    _ARC4 = None
-
-
 def _rc4(key: bytes, data: bytes) -> bytes:
-    """RC4 (ISO 32000-1 §7.6.2): OpenSSL-backed when `cryptography`
-    is importable and the key size is one it accepts (PDF keys are
-    5/10/16 bytes — all accepted), else pure-stdlib KSA + PRGA —
-    both validated against the RFC 6229-style "Key"/"Plaintext"
-    vector in tests."""
-    if _ARC4 is not None:
-        try:
-            enc = _Cipher(_ARC4(key), mode=None).encryptor()
-            return enc.update(data) + enc.finalize()
-        except ValueError:  # key size outside OpenSSL's RC4 set
-            pass
+    """RC4 (ISO 32000-1 §7.6.2). OpenSSL, as `cryptography` exposes
+    it, takes only 5/7/8/10/16/20/24/32-byte keys; PDF file keys run
+    5-16 bytes and object keys 10-16, so the other lengths (6, 9,
+    11-15) run the stdlib KSA + PRGA."""
+    if len(key) * 8 in ARC4.key_sizes:
+        enc = Cipher(ARC4(key), mode=None).encryptor()
+        return enc.update(data) + enc.finalize()
     S = list(range(256))
     j = 0
     klen = len(key)
@@ -344,6 +333,18 @@ def _rc4(key: bytes, data: bytes) -> bytes:
         S[i], S[j] = S[j], S[i]
         out[k] = c ^ S[(S[i] + S[j]) & 0xFF]
     return bytes(out)
+
+
+def _aes(
+    key: bytes, data: bytes, iv: bytes | None = None, decrypt: bool = False
+) -> bytes:
+    """AES (FIPS-197) through OpenSSL: CBC without padding when `iv`
+    is given (the PDF layer applies PKCS#7), else ECB. Data must be
+    block-aligned."""
+    mode = modes.CBC(iv) if iv is not None else modes.ECB()
+    c = Cipher(algorithms.AES(key), mode)
+    op = c.decryptor() if decrypt else c.encryptor()
+    return op.update(data) + op.finalize()
 
 
 def _pw_pad(pw: bytes) -> bytes:
@@ -420,13 +421,11 @@ import functools
 def _hash_r6(pw: bytes, salt: bytes, udata: bytes, r: int) -> bytes:
     """ISO 32000-2 Algorithm 2.B (the R6 iterated KDF; R5 is the
     plain SHA-256). Deliberately memoized: the KDF runs 64+ AES-CBC
-    rounds over a multi-KB buffer (~50 ms in pure Python), and a
+    rounds over a multi-KB buffer and SHA-2 hashes, and a
     batch of same-source files re-derives identical (salt, pw)
     inputs — notably the fixture gate, where every worker pays the
     KDF once instead of per document."""
     import hashlib
-
-    from geist_spark.operators._aes import aes_cbc_encrypt
 
     k = hashlib.sha256(pw + salt + udata).digest()
     if r == 5:
@@ -434,7 +433,7 @@ def _hash_r6(pw: bytes, salt: bytes, udata: bytes, r: int) -> bytes:
     i = 0
     while True:
         k1 = (pw + k + udata) * 64
-        e = aes_cbc_encrypt(k[:16], k[16:32], k1)
+        e = _aes(k[:16], k1, iv=k[16:32])
         mod = sum(e[:16]) % 3
         k = (
             hashlib.sha256(e) if mod == 0
@@ -464,14 +463,12 @@ def _decrypt_bytes(
 ) -> bytes:
     if mode == "rc4":
         return _rc4(_obj_rc4_key(key, num, gen), data)
-    from geist_spark.operators._aes import aes_cbc_decrypt
-
     k = _aes_obj_key(key, num, gen) if mode == "aesv2" else key
     if len(data) < 32 or len(data) % 16:
         raise ValueError(
             "malformed PDF: AES payload is not IV + padded blocks"
         )
-    plain = aes_cbc_decrypt(k, data[:16], data[16:])
+    plain = _aes(k, data[16:], iv=data[:16], decrypt=True)
     pad = plain[-1]
     if not 1 <= pad <= 16 or plain[-pad:] != bytes([pad]) * pad:
         raise ValueError("malformed PDF: bad AES (PKCS#7) padding")
@@ -571,10 +568,8 @@ def _setup_decryption(trailer: dict, objects: dict, max_bytes: int):
             raise NotImplementedError(
                 "encrypted PDF: non-empty user password required"
             )
-        from geist_spark.operators._aes import aes_cbc_decrypt
-
         ikey = _hash_r6(b"", ksalt, b"", r)
-        file_key = aes_cbc_decrypt(ikey, bytes(16), ue[:32])
+        file_key = _aes(ikey, ue[:32], iv=bytes(16), decrypt=True)
         objects["__crypt__"] = ("aesv3", file_key, skip)
         return
     length = _resolve(enc.get("Length", 40), objects, max_bytes)
@@ -1714,31 +1709,26 @@ def pdf_build(
         u_val = _std_compute_u(crypt_key, id0, 4)
         crypt_mode = "aesv2"
     elif encrypt_aes == 5:
-        from geist_spark.operators._aes import aes_cbc_encrypt
-
-        # a CONSTANT seed across fixtures: the R6 KDF costs ~250 ms
-        # per distinct salt even table-driven, and _hash_r6's memo
-        # only pays off when the gate's documents share the
-        # credential block (content still varies per document)
+        # a CONSTANT seed across fixtures: _hash_r6's memo only pays
+        # off when the gate's documents share the credential block
+        # (content still varies per document)
         seed = hashlib.md5(b"geist-aes5-fixture").digest()
         crypt_key = hashlib.sha256(seed).digest()  # the FILE key
         vsalt = seed[:8]
         ksalt = seed[8:16]
         u_val = _hash_r6(b"", vsalt, b"", 6) + vsalt + ksalt
-        ue_val = aes_cbc_encrypt(
-            _hash_r6(b"", ksalt, b"", 6), bytes(16), crypt_key
+        ue_val = _aes(
+            _hash_r6(b"", ksalt, b"", 6), crypt_key, iv=bytes(16)
         )
         ovsalt = hashlib.md5(seed + b"ov").digest()[:8]
         oksalt = hashlib.md5(seed + b"ok").digest()[:8]
         o_val = (
             _hash_r6(b"owner", ovsalt, u_val, 6) + ovsalt + oksalt
         )
-        oe_val = aes_cbc_encrypt(
-            _hash_r6(b"owner", oksalt, u_val, 6), bytes(16), crypt_key
+        oe_val = _aes(
+            _hash_r6(b"owner", oksalt, u_val, 6), crypt_key, iv=bytes(16)
         )
-        from geist_spark.operators._aes import aes_encrypt_block
-
-        perms = aes_encrypt_block(
+        perms = _aes(
             crypt_key,
             (0xFFFFFFFF).to_bytes(4, "little") + b"\xff\xff\xff\xff"
             + b"T" + b"adb" + b"geis",
@@ -1770,17 +1760,13 @@ def pdf_build(
             if crypt_mode == "rc4":
                 data = _rc4(_obj_rc4_key(crypt_key, num, 0), data)
             else:
-                from geist_spark.operators._aes import aes_cbc_encrypt
-
                 k = (
                     _aes_obj_key(crypt_key, num, 0)
                     if crypt_mode == "aesv2" else crypt_key
                 )
                 iv = hashlib.md5(b"iv%d" % num).digest()[:16]
                 pad = 16 - len(data) % 16
-                data = iv + aes_cbc_encrypt(
-                    k, iv, data + bytes([pad]) * pad
-                )
+                data = iv + _aes(k, data + bytes([pad]) * pad, iv=iv)
         filt = b"/Filter /FlateDecode " if flate else b""
         if indirect_length:
             objs[next_extra] = b"%d" % len(data)

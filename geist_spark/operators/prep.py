@@ -702,13 +702,15 @@ def decompress_text(
     gzip (magic 1f 8b, multi-member concatenation handled), zlib
     (0x78 family), bzip2 ("BZh", multi-stream pbzip2 output handled),
     xz ("\\xfd7zXZ", multi-stream + stream padding), zstd (magic 28
-    b5 2f fd, multi-frame + skippable frames, RFC 8878 decoder in
-    operators/zstd.py), LZ4 frames (magic 04 22 4d 18,
-    operators/lzcodecs.py — block/content xxh32 checksums verified)
-    and framed Snappy (sNaPpY stream, masked CRC-32C verified) — all
-    inside one Arrow-batched mapInPandas stage — zero shuffle,
-    partitioning preserved. Returns (id, text utf-8 with U+FFFD for
-    invalid bytes, byte_len of the DECOMPRESSED payload).
+    b5 2f fd, multi-frame + skippable frames, content checksums
+    verified), LZ4 frames (magic 04 22 4d 18, linked or independent
+    blocks, block/content checksums verified) and framed Snappy
+    (sNaPpY stream, masked CRC-32C verified) — all inside one
+    Arrow-batched mapInPandas stage — zero shuffle, partitioning
+    preserved. Every codec but gzip/zlib is decoded by
+    operators/lzcodecs.py (pyarrow's native zstd/LZ4/Snappy, the
+    bounded stdlib bz2/xz stream walk). Returns (id, text utf-8 with
+    U+FFFD for invalid bytes, byte_len of the DECOMPRESSED payload).
 
     Two-tier errors, repo contract: unknown magic (brotli — its
     mandatory 120 KB static dictionary is not reproducible from
@@ -718,14 +720,12 @@ def decompress_text(
     raise ValueError. Every codec's output is BOUNDED at max_bytes
     (a decompression bomb raises the typed malformed error, never
     OOMs the executor — the PNG IDAT rule)."""
-    import bz2
-    import lzma
     import zlib
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from geist_spark.operators import lzcodecs, zstd as zstd_codec
+    from geist_spark.operators import lzcodecs
 
     if on_unsupported not in ("error", "null"):
         raise ValueError("on_unsupported must be 'error' or 'null'")
@@ -758,37 +758,6 @@ def decompress_text(
                 raise ValueError("trailing garbage after zlib stream")
         return b"".join(parts)
 
-    def inflate_bx(b: bytes, codec: str) -> bytes:
-        # bz2 / xz: one stdlib decompressor per concatenated stream
-        # (pbzip2 / multi-stream xz), each bounded at the remaining
-        # budget like the zlib path
-        parts, data, budget = [], b, max_bytes
-        while data:
-            d = (
-                bz2.BZ2Decompressor()
-                if codec == "bz2"
-                else lzma.LZMADecompressor(lzma.FORMAT_XZ)
-            )
-            try:
-                chunk = d.decompress(data, budget + 1)
-            except (OSError, lzma.LZMAError) as exc:
-                raise ValueError(
-                    f"malformed {codec} payload: {exc}"
-                ) from None
-            parts.append(chunk)
-            budget -= len(chunk)
-            if budget < 0:
-                raise ValueError(
-                    f"compressed payload inflates past max_bytes={max_bytes}"
-                )
-            if not d.eof:
-                raise ValueError("truncated compressed payload")
-            data = d.unused_data
-            if codec == "xz":
-                # xz stream padding: NUL runs between streams are legal
-                data = data.lstrip(b"\x00")
-        return b"".join(parts)
-
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
             ids, texts, lens = [], [], []
@@ -818,12 +787,14 @@ def decompress_text(
                     if b[:2] == b"\x1f\x8b" or is_zlib:
                         raw = inflate(b)
                     elif is_bz2:
-                        raw = inflate_bx(b, "bz2")
+                        raw = lzcodecs.inflate_bx(b, "bz2", max_bytes)
                     elif b[:6] == b"\xfd7zXZ\x00":
-                        raw = inflate_bx(b, "xz")
+                        raw = lzcodecs.inflate_bx(b, "xz", max_bytes)
                     elif is_zstd:
                         try:
-                            raw = zstd_codec.decompress(b, max_bytes=max_bytes)
+                            raw = lzcodecs.zstd_decompress(
+                                b, max_bytes=max_bytes
+                            )
                         except NotImplementedError:
                             # dictionary-keyed frame: capability limit
                             if on_unsupported == "error":

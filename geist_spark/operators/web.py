@@ -272,12 +272,12 @@ def _warc_records(b: bytes, max_bytes: int):
     ):
         # zstd transport (the CommonCrawl .warc.zst layout: concatenated
         # frames, optional seek-index/dictionary skippable frames) via
-        # the from-scratch RFC 8878 decoder; same max_bytes bound as
-        # the gzip path. Dictionary-keyed frames surface the decoder's
-        # typed NotImplementedError (capability limit).
-        from geist_spark.operators.zstd import decompress as _zstd_d
+        # pyarrow's libzstd; same max_bytes bound as the gzip path.
+        # Dictionary-keyed frames surface the decoder's typed
+        # NotImplementedError (capability limit).
+        from geist_spark.operators.lzcodecs import zstd_decompress
 
-        b = _zstd_d(bytes(b), max_bytes=max_bytes)
+        b = zstd_decompress(bytes(b), max_bytes=max_bytes)
     elif b[:2] == b"\x1f\x8b":
         parts, data, budget = [], bytes(b), max_bytes
         while data:
@@ -354,7 +354,7 @@ def warc_parse(
     is the integer code and body the payload after the header CRLF
     CRLF; for other records body is the whole block. Plain,
     gzip-transport (concatenated members, stdlib zlib) and
-    zstd-transport (.warc.zst, RFC 8878 decoder in zstd.py) WARCs.
+    zstd-transport (.warc.zst, lzcodecs.zstd_decompress) WARCs.
 
     The CommonCrawl ingestion stage: Arrow-batched mapInPandas over
     (file_id, payload) — the record fan-out happens inside the stage,

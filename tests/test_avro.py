@@ -1,13 +1,17 @@
 """Avro container reader (operators/avro.py): all codecs, full type
 surface, JSON dialect, malformed tiers, Spark surface."""
 
+import bz2
 import json
+import lzma
 import struct
+import tracemalloc
 
 import pytest
 
 from geist_spark.operators.avro import (
     _records_of,
+    _zigzag,
     avro_build,
     avro_info,
     avro_records,
@@ -88,6 +92,28 @@ def test_bomb_bounded():
     blob = avro_build(SCHEMA, recs, codec="deflate")
     with pytest.raises(ValueError, match="max_bytes"):
         list(_records_of(blob, 1000))
+
+
+@pytest.mark.parametrize("codec", ["bzip2", "xz"])
+def test_bz2_xz_bomb_bounded_memory(codec):
+    """A 50 MB zero block under max_bytes=1024 raises before it is
+    inflated: the decompressor stops at max_bytes + 1 of output."""
+    zeros = b"\x00" * 50_000_000
+    comp = bz2.compress(zeros) if codec == "bzip2" else lzma.compress(
+        zeros, preset=0
+    )
+    del zeros
+    header = avro_build(SCHEMA, [], codec=codec)  # header + sync only
+    sync = header[-16:]
+    blob = header + _zigzag(1) + _zigzag(len(comp)) + comp + sync
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="max_bytes"):
+            list(_records_of(blob, 1024))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 * 1024 * 1024, peak
 
 
 def test_spark_surface(spark):

@@ -315,12 +315,16 @@ def test_type0_capability_and_malformed_tiers():
 
 
 def test_rc4_known_vector():
-    """The from-scratch RC4 against the classic 'Key'/'Plaintext'
-    test vector — pins KSA/PRGA independently of the PDF layer."""
+    """RC4 against the classic 'Key'/'Plaintext' vector (a 3-byte key,
+    outside OpenSSL's RC4 key sizes: the KSA + PRGA path) and RFC 6229's
+    40-bit key 0102030405 at offset 0 (the OpenSSL path)."""
     from geist_spark.operators.pdf import _rc4
 
     assert _rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
     assert _rc4(b"Key", _rc4(b"Key", b"roundtrip")) == b"roundtrip"
+    assert _rc4(bytes.fromhex("0102030405"), bytes(16)).hex() == (
+        "b2396305f03dc027ccc3524a0a1118a8"
+    )
 
 
 def test_encrypted_rc4_empty_user_password():
@@ -366,14 +370,9 @@ def test_encrypted_rc4_empty_user_password():
 
 
 def test_aes_fips_vectors():
-    """The pure-Python AES against the FIPS-197 Appendix C known
-    answers, all three key sizes, both directions, plus CBC."""
-    from geist_spark.operators._aes import (
-        aes_cbc_decrypt,
-        aes_cbc_encrypt,
-        aes_decrypt_block,
-        aes_encrypt_block,
-    )
+    """AES against the FIPS-197 Appendix C known answers, all three key
+    sizes, both directions, plus a CBC round trip."""
+    from geist_spark.operators.pdf import _aes
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     for klen, want in (
@@ -382,49 +381,24 @@ def test_aes_fips_vectors():
         (32, "8ea2b7ca516745bfeafc49904b496089"),
     ):
         key = bytes(range(klen))
-        assert aes_encrypt_block(key, pt).hex() == want
-        assert aes_decrypt_block(key, bytes.fromhex(want)) == pt
+        assert _aes(key, pt).hex() == want
+        assert _aes(key, bytes.fromhex(want), decrypt=True) == pt
     key = bytes(range(32))
     iv = b"\xaa" * 16
     data = bytes(range(256)) * 2
-    assert aes_cbc_decrypt(key, iv, aes_cbc_encrypt(key, iv, data)) \
-        == data
+    assert _aes(key, _aes(key, data, iv=iv), iv=iv, decrypt=True) == data
 
 
-def test_aes_native_path_matches_pure_python():
-    """The OpenSSL fast path (cryptography, when importable) must be
-    byte-identical to the pure-Python T-table fallback — both tiers
-    stay live (the fallback covers environments without the lib), so
-    pin their equality on block + CBC, all key sizes."""
-    from geist_spark.operators import _aes
+def test_aes_cbc_nist_sp800_38a_vector():
+    """CBC-AES128 against NIST SP 800-38A F.2.1 (first block)."""
+    from geist_spark.operators.pdf import _aes
 
-    if _aes._Cipher is None:
-        pytest.skip("cryptography not installed; only one tier live")
-
-    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    key = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
     iv = bytes(range(16))
-    data = bytes((i * 7 + 3) % 256 for i in range(16 * 13))
-    for klen in (16, 24, 32):
-        key = bytes((i * 11 + 1) % 256 for i in range(klen))
-        rounds = klen // 4 + 6
-        assert _aes.aes_encrypt_block(key, pt) == _aes._encrypt_block_w(
-            pt, _aes._expand_key(key), rounds
-        )
-        ct = _aes.aes_encrypt_block(key, pt)
-        assert _aes.aes_decrypt_block(key, ct) == _aes._decrypt_block_w(
-            ct, _aes._expand_key_dec(key), rounds
-        )
-        # pure CBC reimplementation over the pure block fn
-        words = _aes._expand_key(key)
-        out, prev = bytearray(), iv
-        for i in range(0, len(data), 16):
-            blk = bytes(
-                a ^ b for a, b in zip(data[i: i + 16], prev)
-            )
-            prev = _aes._encrypt_block_w(blk, words, rounds)
-            out += prev
-        assert _aes.aes_cbc_encrypt(key, iv, data) == bytes(out)
-        assert _aes.aes_cbc_decrypt(key, iv, bytes(out)) == data
+    pt = bytes.fromhex("6bc1bee22e409f96e93d7e117393172a")
+    ct = bytes.fromhex("7649abac8119b246cee98e9b12e9197d")
+    assert _aes(key, pt, iv=iv) == ct
+    assert _aes(key, ct, iv=iv, decrypt=True) == pt
 
 
 def test_encrypted_aes_empty_user_password():

@@ -1123,9 +1123,10 @@ def test_decompress_text_roundtrip_and_errors(spark):
 
     import pytest
 
-    from geist_spark.operators.prep import decompress_text
+    import pyarrow as pa
 
-    from geist_spark.operators.zstd import compress as zstd_compress
+    from geist_spark.operators.lzcodecs import snappy_stream_compress
+    from geist_spark.operators.prep import decompress_text
 
     two_member = gzip.compress(b"hello ") + gzip.compress(b"world")
     rows = [
@@ -1134,13 +1135,9 @@ def test_decompress_text_roundtrip_and_errors(spark):
         (3, two_member),
         (4, gzip.compress(b"\xff\xfe invalid utf8")),
         (5, None),
-        (6, zstd_compress("zstd tèxt".encode())),
-        (7, __import__(
-            "geist_spark.operators.lzcodecs", fromlist=["x"]
-        ).lz4_compress(b"lz4 payload")),
-        (8, __import__(
-            "geist_spark.operators.lzcodecs", fromlist=["x"]
-        ).snappy_stream_compress(b"snappy payload")),
+        (6, pa.compress("zstd tèxt".encode(), codec="zstd", asbytes=True)),
+        (7, pa.compress(b"lz4 payload", codec="lz4", asbytes=True)),
+        (8, snappy_stream_compress(b"snappy payload")),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     out = {r["doc_id"]: r for r in decompress_text(df).collect()}

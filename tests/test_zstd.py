@@ -1,22 +1,26 @@
-"""RFC 8878 zstd codec: paired encoder/decoder round-trips, CLI
-cross-validation where the zstd binary exists, bomb/malformed guards,
-and xxh64 vectors."""
+"""zstd decode (operators/lzcodecs.zstd_decompress over pyarrow's
+libzstd): CLI-produced frames, multi-frame + skippable layouts, the
+max_bytes bound, the dictionary capability tier, typed malformed
+errors and content-checksum verification."""
 
 import random
 import shutil
 import struct
 import subprocess
 
+import pyarrow as pa
 import pytest
 
-from geist_spark.operators.zstd import (
-    compress,
-    decompress,
-    skippable_frame,
-    xxh64,
-)
+from geist_spark.operators.lzcodecs import zstd_decompress
 
 HAVE_CLI = shutil.which("zstd") is not None
+
+# `zstd -q -c` of b"payload with checksum": one raw block plus the
+# XXH64 content checksum the CLI writes by default
+CHECKSUMMED = bytes.fromhex(
+    "28b52ffd2415a900007061796c6f6164207769746820636865636b73756d"
+    "873afd21"
+)
 
 
 def _doc(seed: int, n: int) -> bytes:
@@ -28,42 +32,25 @@ def _doc(seed: int, n: int) -> bytes:
     return b"".join(rng.choice(words) for _ in range(n))
 
 
-def _cli_roundtrip(blob: bytes) -> bytes:
+def _skippable(payload: bytes, nibble: int = 0) -> bytes:
+    return struct.pack("<II", 0x184D2A50 + nibble, len(payload)) + payload
+
+
+def _zc(data: bytes, level: int = 3) -> bytes:
+    return pa.Codec("zstd", level).compress(data, asbytes=True)
+
+
+@pytest.mark.skipif(not HAVE_CLI, reason="zstd binary not available")
+@pytest.mark.parametrize("level", [1, 3, 9, 19])
+def test_decode_cli_frames(level):
+    """Frames from the reference CLI (content checksum on by
+    default) at several levels."""
+    data = _doc(11, 40000) * 3
     p = subprocess.run(
-        ["zstd", "-d", "-q", "-c"], input=blob, capture_output=True
+        ["zstd", "-q", f"-{level}", "-c"], input=data, capture_output=True
     )
-    assert p.returncode == 0, p.stderr.decode()
-    return p.stdout
-
-
-def test_xxh64_vectors():
-    # official XXH64 test vectors (seed 0)
-    assert xxh64(b"") == 0xEF46DB3751D8E999
-    assert xxh64(b"abc") == 0x44BC2CF5AD770999
-
-
-OPTS = [
-    {},
-    {"store": True},
-    {"four_stream": True},
-    {"four_stream": False},
-    {"fse_weights": False},
-    {"seq_mode": "fse"},
-    {"seq_mode": "predefined"},
-    {"use_repcodes": False},
-    {"reuse_tables": True},
-    {"checksum": False},
-    {"block_bytes": 3000},
-]
-
-
-@pytest.mark.parametrize("opts", OPTS)
-def test_roundtrip_paths(opts):
-    data = _doc(7, 20000)
-    blob = compress(data, **opts)
-    assert decompress(blob, max_bytes=10**7) == data
-    if HAVE_CLI:
-        assert _cli_roundtrip(blob) == data
+    assert p.returncode == 0
+    assert zstd_decompress(p.stdout, max_bytes=10**7) == data
 
 
 @pytest.mark.parametrize(
@@ -72,53 +59,64 @@ def test_roundtrip_paths(opts):
     ids=["empty", "one", "two", "rle", "cycle"],
 )
 def test_roundtrip_edges(data):
-    blob = compress(data)
-    assert decompress(blob, max_bytes=10**7) == data
+    """Edge payloads in pyarrow's one-shot frames (single-segment,
+    content size in the header) and, where the CLI exists, in its
+    streamed frames (window descriptor, no content size)."""
+    assert zstd_decompress(_zc(data), max_bytes=10**7) == data
     if HAVE_CLI:
-        assert _cli_roundtrip(blob) == data
+        p = subprocess.run(
+            ["zstd", "-q", "-c"], input=data, capture_output=True
+        )
+        assert zstd_decompress(p.stdout, max_bytes=10**7) == data
 
 
 def test_multiframe_and_skippable():
     blob = (
-        compress(b"first. ")
-        + skippable_frame(b"ignored-index", 14)
-        + compress(b"second.")
+        _skippable(b"seek-index")
+        + _zc(b"first. ")
+        + _skippable(b"ignored-index", 14)
+        + _zc(b"second.", 19)
+        + _skippable(b"", 15)
     )
-    assert decompress(blob, max_bytes=100) == b"first. second."
-    if HAVE_CLI:
-        assert _cli_roundtrip(blob) == b"first. second."
-
-
-@pytest.mark.skipif(not HAVE_CLI, reason="zstd binary not available")
-@pytest.mark.parametrize("level", [1, 3, 9, 19])
-def test_decode_cli_frames(level):
-    """Frames produced by the reference encoder at several levels
-    (exercises treeless/repeat/repcode shapes my encoder may skip)."""
-    data = _doc(11, 40000) * 3
-    p = subprocess.run(
-        ["zstd", "-q", f"-{level}", "-c"], input=data, capture_output=True
-    )
-    assert p.returncode == 0
-    assert decompress(p.stdout, max_bytes=10**7) == data
+    assert zstd_decompress(blob, max_bytes=100) == b"first. second."
+    for empty in (b"", _skippable(b"only")):
+        with pytest.raises(ValueError, match="no zstd frame"):
+            zstd_decompress(empty)
 
 
 def test_bomb_bounded():
-    blob = compress(b"\x00" * 200000)
-    with pytest.raises(ValueError, match="max_bytes"):
-        decompress(blob, max_bytes=1000)
+    blob = _zc(b"\x00" * 200000)
+    with pytest.raises(ValueError, match="max_bytes=1000"):
+        zstd_decompress(blob, max_bytes=1000)
+    assert zstd_decompress(blob, max_bytes=200000) == b"\x00" * 200000
+
+
+def _with_dictionary_id(frame: bytes, did: int) -> bytes:
+    """Re-key a real frame's header with a 1-byte Dictionary_ID."""
+    fhd = frame[4]
+    assert fhd & 3 == 0
+    hdr = 5 if fhd & 0x20 else 6  # single-segment: no window byte
+    return (frame[:4] + bytes([fhd | 1]) + frame[5:hdr] + bytes([did])
+            + frame[hdr:])
 
 
 def test_dictionary_is_capability_limit():
     # frame header with Dictionary_ID_flag=1, single-segment, FCS 1B
     blob = struct.pack("<I", 0xFD2FB528) + bytes([0x21, 0x07, 0x00])
+    with pytest.raises(NotImplementedError, match="Dictionary_ID=7"):
+        zstd_decompress(blob, max_bytes=100)
+    keyed = _with_dictionary_id(_zc(b"dictionary keyed text " * 20), 9)
     with pytest.raises(NotImplementedError, match="[Dd]ictionary"):
-        decompress(blob, max_bytes=100)
+        zstd_decompress(_skippable(b"x") + keyed)
+    # a dictionary frame after a plain one: only libzstd sees it
+    with pytest.raises(NotImplementedError, match="[Dd]ictionary"):
+        zstd_decompress(_zc(b"plain first") + keyed)
 
 
 def test_malformed_is_typed():
-    base = compress(_doc(3, 5000))
+    base = _zc(_doc(3, 5000))
     rng = random.Random(0)
-    for _ in range(150):
+    for _ in range(200):
         b = bytearray(base)
         mode = rng.randrange(3)
         if mode == 0:
@@ -129,26 +127,19 @@ def test_malformed_is_typed():
             for _ in range(6):
                 b[rng.randrange(len(b))] = rng.randrange(256)
         try:
-            decompress(bytes(b), max_bytes=10**6)
+            zstd_decompress(bytes(b), max_bytes=10**6)
         except (ValueError, NotImplementedError):
             pass  # the only permitted failure modes
-
-
-def test_repcode_paths():
-    """Period-8 text forces repeated offsets; with repcodes on, the
-    frame must still round-trip (and shrink vs. repcodes off)."""
-    data = (b"abcdefgh" * 4000) + b"tail"
-    on = compress(data, use_repcodes=True)
-    off = compress(data, use_repcodes=False)
-    assert decompress(on, max_bytes=10**6) == data
-    assert decompress(off, max_bytes=10**6) == data
-    if HAVE_CLI:
-        assert _cli_roundtrip(on) == data
+    with pytest.raises(ValueError, match="malformed zstd"):
+        zstd_decompress(b"\x28\xb5\x2f\xfd fake-zstd")
+    with pytest.raises(ValueError, match="malformed zstd"):
+        zstd_decompress(_zc(b"ok") + b"trailing garbage")
 
 
 def test_checksum_detects_corruption():
-    blob = bytearray(compress(b"payload with checksum", checksum=True))
-    # flip a literal byte inside the (raw-block) frame body, not header
-    blob[-6] ^= 0xFF
-    with pytest.raises(ValueError):
-        decompress(bytes(blob), max_bytes=10**6)
+    assert zstd_decompress(CHECKSUMMED) == b"payload with checksum"
+    for at in (12, -2):  # a literal byte, then the checksum itself
+        blob = bytearray(CHECKSUMMED)
+        blob[at] ^= 0x01
+        with pytest.raises(ValueError, match="checksum"):
+            zstd_decompress(bytes(blob), max_bytes=10**6)

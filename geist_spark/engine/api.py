@@ -296,21 +296,13 @@ class Engine:
         engine — the geist Metrics surface (geist.go Metrics())
         re-expressed Spark-first. Counters are driver-side ints; the
         frame is literal-backed (no job runs to build it)."""
-        from dataclasses import asdict
+        from dataclasses import astuple, fields
 
-        rows = []
-        for sid, st in self._streams.items():
-            d = asdict(st.metrics)
-            d["stream_id"] = sid
-            rows.append(d)
-        from geist_spark.engine.metrics import Metrics as _M
+        from geist_spark.functions.localdf import local_df
 
-        cols = ["stream_id", *[f for f in asdict(_M())]]
-        schema = "stream_id string, " + ", ".join(
-            f"{c} long" for c in cols[1:]
-        )
-        data = [tuple(r[c] for c in cols) for r in rows]
-        return self.spark.createDataFrame(data, schema)
+        schema = ", ".join(["stream_id string", *(f"{f.name} long" for f in fields(Metrics))])
+        rows = [(sid, *astuple(st.metrics)) for sid, st in self._streams.items()]
+        return local_df(self.spark, rows, schema)
 
     def entities(self) -> dict[str, dict[str, bool]]:
         """Registered entity types per kind (reference geist.Entities,

@@ -14,6 +14,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from geist_spark.functions.localdf import local_df
+
 
 class DeadLetterQueue:
     def __init__(self, spark: SparkSession, stream_id: str, path: str | None = None):
@@ -36,8 +38,7 @@ class DeadLetterQueue:
     def add_event(self, event: str, reason: str = "") -> None:
         """Single-event convenience (interactive publish path): one
         row, so no probe."""
-        df = self.spark.createDataFrame([(event,)], "value string").coalesce(1)
-        self._append(df, "value", reason)
+        self._append(local_df(self.spark, [(event,)], "value string"), "value", reason)
 
     def _append(self, df: DataFrame, value_col: str, reason: str) -> int:
         """One parquet append; the row count is an Observation on the

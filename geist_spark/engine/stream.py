@@ -1,23 +1,22 @@
 """Stream: one registered spec bound to source -> compiled transform ->
-sink, plus the executor's event-processing semantics.
+sink, with the synchronous event paths.
 
 Mirrors internal/pkg/engine/stream.go:11-36 and executor.go:175-329:
-hooks -> transform -> load-with-retry -> HOUE policy for unretryable
-events. Both paths route every event once (`CompiledTransform.route`)
-and read the sink records and the rejects from that one routed frame.
-The publish (geistapi) path processes a single-event batch
-synchronously — one collect of the routed row decides error / excluded
-/ load — and returns the sink resource id, exactly the reference's
-channel-source ack contract
-(internal/pkg/entity/channel/extractor.go:46-98).
+hooks -> transform -> load-with-retry -> HOUE. Both paths route every
+event once (`CompiledTransform.route`) and run their hooks; the
+stream's `BatchExecutor` (engine/executor.py) owns the sink load, HOUE
+(`default` = discard here) and the DLQ. Loads carry no epoch, so an
+epochIdempotent table appends them. Publish (geistapi) decides error /
+excluded / load from one collect of its routed row, dead-letters the
+raw event, and returns the sink resource id: the reference's
+channel-source ack contract (internal/pkg/entity/channel/extractor.go:46-98).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from geist_spark.compiler.transform import (
     OUTCOME_COL,
@@ -25,6 +24,8 @@ from geist_spark.compiler.transform import (
     OUTCOME_EXCLUDED,
     CompiledTransform,
 )
+from geist_spark.engine.dlq import DeadLetterQueue
+from geist_spark.engine.executor import BatchExecutor, UnretryableStreamError  # noqa: F401
 from geist_spark.engine.hooks import (
     EventHolder,
     HookAction,
@@ -32,13 +33,9 @@ from geist_spark.engine.hooks import (
     PreTransformHook,
 )
 from geist_spark.engine.metrics import Metrics, Notifier
-from geist_spark.sinks.base import Loader, SinkError
-from geist_spark.spec.model import (
-    HOUE_DISCARD,
-    HOUE_DLQ,
-    HOUE_FAIL,
-    Spec,
-)
+from geist_spark.functions.localdf import local_df
+from geist_spark.sinks.base import Loader
+from geist_spark.spec.model import Spec
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -53,10 +50,6 @@ class StreamShutdown(Exception):
     pass
 
 
-class UnretryableStreamError(Exception):
-    pass
-
-
 @dataclass
 class Stream:
     spark: SparkSession
@@ -67,19 +60,16 @@ class Stream:
     pre_hook: PreTransformHook | None = None
     post_hook: PostTransformHook | None = None
     notifier: Notifier = field(default_factory=Notifier)
-    dlq: "DeadLetterQueue | None" = None
     metrics: Metrics = field(default_factory=Metrics)
 
-    def _dlq(self) -> "DeadLetterQueue":
-        if self.dlq is None:
-            from geist_spark.engine.dlq import DeadLetterQueue
+    def __post_init__(self) -> None:
+        self.executor = BatchExecutor(
+            self.spark, self.spec, self.loader, self.metrics, notifier=self.notifier
+        )
 
-            self.dlq = DeadLetterQueue(
-                self.spark,
-                self.spec.id,
-                self.spec.ops.custom_properties.get("dlqPath"),
-            )
-        return self.dlq
+    @property
+    def dlq(self) -> DeadLetterQueue | None:
+        return self.executor.dlq
 
     # -- publish path (geistapi): single-event sync batch ------------
 
@@ -98,19 +88,15 @@ class Stream:
             if action == HookAction.SHUTDOWN:
                 raise StreamShutdown(self.spec.id)
             if action in (HookAction.RETRYABLE_ERROR, HookAction.UNRETRYABLE_ERROR):
-                return self._handle_unretryable(event, f"pre-hook {action.name}")
+                return self._reject(event, f"pre-hook {action.name}")
             event = holder.data
 
-        # single-event batch: keep it on ONE partition (default
-        # parallelism would fan a 1-row plan out to N tasks)
-        df = self.spark.createDataFrame(
-            [(event, None, None)], EVENT_SCHEMA
-        ).coalesce(1)
-        # one routed row: its outcome and records in a single collect
-        routed = self.transform.route(df)
+        # one routed row (a LocalTableScan: one partition, and no job
+        # for the collect): its outcome and records in a single collect
+        routed = self.transform.route(local_df(self.spark, [(event, None, None)], EVENT_SCHEMA))
         row = routed.collect()[0]
         if row[OUTCOME_COL] == OUTCOME_ERROR:
-            return self._handle_unretryable(event, "transform error (regexp)")
+            return self._reject(event, "transform error")
         if row[OUTCOME_COL] == OUTCOME_EXCLUDED:
             self.metrics.events_excluded += 1
             return ""  # filtered -> nil,nil (transformer.go:41-43)
@@ -125,79 +111,34 @@ class Stream:
             if action == HookAction.SHUTDOWN:
                 raise StreamShutdown(self.spec.id)
             if action in (HookAction.RETRYABLE_ERROR, HookAction.UNRETRYABLE_ERROR):
-                return self._handle_unretryable(event, f"post-hook {action.name}")
-            out = self.spark.createDataFrame(dicts, out.schema)
+                return self._reject(event, f"post-hook {action.name}")
+            names = out.schema.fieldNames()
+            out = local_df(self.spark, [tuple(d.get(n) for n in names) for d in dicts], out.schema)
 
-        return self._load_with_retry(out, event)
+        rid = self.executor.load(out, None, rejects=self._raw(event))
+        self.metrics.events_stored_in_sink += int(rid is not None)
+        return rid or ""
+
+    def _raw(self, event: str) -> DataFrame:
+        """The raw event as a one-row DLQ payload frame."""
+        return local_df(self.spark, [(event,)], "value string")
+
+    def _reject(self, event: str, reason: str) -> str:
+        self.executor.unretryable(self._raw(event), reason)
+        return ""
 
     # -- batch path: run a whole DataFrame of events through ---------
 
     def process_batch(self, events_df: DataFrame, value_col: str = "value") -> str:
         """foreachBatch body: transform (+ analytics sections) + load
         one micro-batch. The geistapi single-event publish path skips
-        analytics — dedup/aggregate are stream-level operators.
-
-        The batch is routed once and persisted; under HOUE=fail a
-        rejected event raises before the sink sees any row, under
-        HOUE=dlq the rejects are appended after the sink load."""
+        analytics — dedup/aggregate are stream-level operators."""
         from geist_spark.compiler.analytics import apply_analytics
 
-        self.metrics.microbatches += 1
         ct = self.transform
-        houe = self.spec.ops.handling_of_unretryable_events
-        routed = ct.route(events_df, value_col=value_col).persist()
-        try:
-            bad = ct.errors(routed, value_col=value_col)
-            if houe == HOUE_FAIL and not bad.isEmpty():
-                raise UnretryableStreamError(f"unretryable events in {self.spec.id}")
-            out = apply_analytics(ct.records(routed), self.spec.transform)
-            rid = self._load_with_retry(out, None)
-            if houe == HOUE_DLQ:
-                # distributed parquet append — no driver-side collect
-                self.metrics.events_failed += self._dlq().add_df(
-                    bad, value_col=value_col, reason="transform error"
-                )
-            return rid
-        finally:
-            routed.unpersist()
-
-    # -- internals ---------------------------------------------------
-
-    def _load_with_retry(self, out: DataFrame, event: str | None) -> str:
-        """Retry loop per ops.maxEventProcessingRetries with backoff
-        (executor.go:282-329; backoff shortened for tests via ops
-        customProperties['retryBackoffMs'])."""
-        retries = self.spec.ops.max_event_processing_retries
-        backoff_ms = int(self.spec.ops.custom_properties.get("retryBackoffMs", "2000"))
-        attempt = 0
-        while True:
-            try:
-                t0 = time.perf_counter()
-                rid = self.loader.stream_load(out)
-                self.metrics.sink_operations += 1
-                self.metrics.sink_processing_time_micros += int(
-                    (time.perf_counter() - t0) * 1e6
-                )
-                self.metrics.events_stored_in_sink += 1
-                return rid
-            except SinkError as e:
-                if not e.retryable:
-                    return self._handle_unretryable(event, str(e))
-                attempt += 1
-                if attempt > retries:
-                    raise
-                time.sleep(backoff_ms / 1000.0 * (2 ** (attempt - 1)))
-
-    def _handle_unretryable(self, event: str | None, reason: str) -> str:
-        """HOUE policy (entity/spec.go:21-26,144-160)."""
-        self.metrics.events_failed += 1
-        houe = self.spec.ops.handling_of_unretryable_events
-        if houe == HOUE_FAIL:
-            raise UnretryableStreamError(f"{self.spec.id}: {reason}")
-        if houe == HOUE_DLQ and event is not None:
-            self._dlq().add_event(event, reason=reason)
-        self.notifier.notify(
-            "WARN", "executor", f"unretryable event: {reason}",
-            stream=self.spec.id,
+        return self.executor.run_batch(
+            ct,
+            ct.route(events_df, value_col=value_col),
+            value_col=value_col,
+            shape=lambda out: apply_analytics(out, self.spec.transform),
         )
-        return ""

@@ -73,19 +73,29 @@ def _snappy_mask(crc: int) -> int:
 # zstd / LZ4 frames
 
 
+def _is_skippable(b: bytes, pos: int) -> bool:
+    return struct.unpack_from("<I", b, pos)[0] >> 4 == SKIPPABLE_MAGIC >> 4
+
+
+def skippable_prefix(b: bytes) -> int:
+    """Length of the skippable frames (zstd and LZ4 share them) that
+    open `b`: the offset of its first real frame's magic. A truncated
+    run may end past len(b)."""
+    pos = 0
+    while len(b) - pos >= 8 and _is_skippable(b, pos):
+        pos += 8 + struct.unpack_from("<I", b, pos + 4)[0]
+    return pos
+
+
 def _first_frame(b: bytes, what: str, magic: int) -> int:
     """Offset of the first frame descriptor after any leading
     skippable frames; that frame must carry `magic`."""
-    pos = 0
-    while True:
-        if len(b) - pos < 4:
-            raise _err(what, f"payload contains no {what} frame")
-        m = struct.unpack_from("<I", b, pos)[0]
-        if m >> 4 != SKIPPABLE_MAGIC >> 4:
-            break
-        if len(b) - pos < 8:
-            raise _err(what, "truncated skippable frame")
-        pos += 8 + struct.unpack_from("<I", b, pos + 4)[0]
+    pos = skippable_prefix(b)
+    if len(b) - pos < 4:
+        raise _err(what, f"payload contains no {what} frame")
+    if _is_skippable(b, pos):
+        raise _err(what, "truncated skippable frame")
+    m = struct.unpack_from("<I", b, pos)[0]
     if m != magic:
         raise _err(what, f"bad frame magic 0x{m:08x}")
     if len(b) - pos < 5:

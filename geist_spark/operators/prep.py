@@ -779,10 +779,19 @@ def decompress_text(
                         and b[:3] == b"BZh"
                         and 0x31 <= b[3] <= 0x39
                     )
-                    is_zstd = b[:4] == b"\x28\xb5\x2f\xfd" or (
-                        len(b) >= 4
-                        and b[1:4] == b"\x2a\x4d\x18"
-                        and 0x50 <= b[0] <= 0x5F
+                    # zstd and LZ4 share skippable frames: branch on
+                    # the magic of the first real frame behind them; a
+                    # skippable run with no LZ4 frame behind it goes to
+                    # the zstd decoder (malformed when nothing follows)
+                    skip = lzcodecs.skippable_prefix(b)
+                    is_lz4 = b[skip : skip + 4] == b"\x04\x22\x4d\x18"
+                    is_zstd = not is_lz4 and (
+                        b[:4] == b"\x28\xb5\x2f\xfd"
+                        or (
+                            len(b) >= 4
+                            and b[1:4] == b"\x2a\x4d\x18"
+                            and 0x50 <= b[0] <= 0x5F
+                        )
                     )
                     if b[:2] == b"\x1f\x8b" or is_zlib:
                         raw = inflate(b)
@@ -804,7 +813,7 @@ def decompress_text(
                                     "on_unsupported='null'"
                                 ) from None
                             raw = None
-                    elif b[:4] == b"\x04\x22\x4d\x18":
+                    elif is_lz4:
                         try:
                             raw = lzcodecs.lz4_decompress(
                                 b, max_bytes=max_bytes

@@ -33,7 +33,7 @@ class AdminLoader(Loader):
         self.on_event = on_event  # callable(event_name: str) -> None
         self.events_seen = 0
 
-    def stream_load(self, df: DataFrame, epoch_id: int = 0) -> str:
+    def stream_load(self, df: DataFrame, epoch_id: int | None = None) -> str:
         # control-plane scale: a micro-batch holds at most a handful of
         # admin notifications — collect is the point, not an anti-pattern
         names = (

@@ -26,8 +26,10 @@ class Loader(ABC):
     """StreamLoad ≈ a foreachBatch body (reference entity/loader.go:29-33)."""
 
     @abstractmethod
-    def stream_load(self, df: DataFrame, epoch_id: int = 0) -> str:
-        """Write one (micro-)batch; returns sink resource id."""
+    def stream_load(self, df: DataFrame, epoch_id: int | None = None) -> str:
+        """Write one (micro-)batch; returns sink resource id. `epoch_id`
+        is the streaming batch id, or None for a synchronous load
+        (publish, process_batch) that has no replay to deduplicate."""
 
     def shutdown(self) -> None:  # noqa: B027
         pass

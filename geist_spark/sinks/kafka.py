@@ -55,7 +55,7 @@ class KafkaLoader(Loader):
         if not self.topic:
             raise SinkError(f"kafka sink for {spec.id} resolved no topic")
 
-    def stream_load(self, df: DataFrame, epoch_id: int = 0) -> str:
+    def stream_load(self, df: DataFrame, epoch_id: int | None = None) -> str:
         out = payload_df(df, self.payload_from_id, self.key_from_id)
         try:
             (

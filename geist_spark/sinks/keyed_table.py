@@ -76,7 +76,8 @@ class KeyedTableLoader(Loader, SinkExtractor):
         self.dynamic_columns: list[dict] = cfg.get("dynamicColumns") or []
         # effectively-once under at-least-once replay: each micro-batch
         # writes its own epoch partition with dynamic overwrite, so a
-        # replayed epoch replaces itself instead of appending twice
+        # replayed epoch replaces itself instead of appending twice;
+        # synchronous loads (epoch_id None) append
         self.epoch_idempotent: bool = bool(cfg.get("epochIdempotent", False))
         # writeMode="merge": per-batch key upsert over a key-hash
         # bucket layout (module docstring) — maxVersions-aware
@@ -116,7 +117,7 @@ class KeyedTableLoader(Loader, SinkExtractor):
                 "writeMode=merge (append mode has no row to delete)"
             )
 
-    def stream_load(self, df: DataFrame, epoch_id: int = 0) -> str:
+    def stream_load(self, df: DataFrame, epoch_id: int | None = None) -> str:
         out = df
         if self.whitelist:
             wl_col = F.col(self.whitelist["id"]).cast("string")
@@ -156,9 +157,11 @@ class KeyedTableLoader(Loader, SinkExtractor):
         if INGESTION_TS_COL not in out.columns:
             out = out.withColumn(INGESTION_TS_COL, F.current_timestamp())
         if self.epoch_idempotent:
+            # a synchronous load (no epoch) has no replay: it appends to
+            # the NULL-epoch partition, which no epoch overwrite touches
             (
-                out.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
+                out.withColumn("__epoch", F.lit(epoch_id).cast("long"))
+                .write.mode("append" if epoch_id is None else "overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("__epoch")
                 .parquet(self.path)

@@ -33,7 +33,7 @@ class VoidLoader(Loader):
         self._errors = 0
         self._runs = 0
 
-    def stream_load(self, df: DataFrame, epoch_id: int = 0) -> str:
+    def stream_load(self, df: DataFrame, epoch_id: int | None = None) -> str:
         self._runs += 1
         if self.simulate_error and self._errors < self.max_errors:
             self._errors += 1

@@ -10,35 +10,36 @@ Mirrors the reference's executor/supervisor semantics
 - at-least-once with ack-after-sink: checkpointed micro-batches +
   sink write inside foreachBatch (executor.go:168-170)
 - one pass per micro-batch: the stream is routed once at query start
-  (`CompiledTransform.route`); each batch body persists its routed
-  frame, loads the `records()` view into the sink and appends the
-  `errors()` view to the DLQ, so no event is scanned or parsed twice
-- HOUE policy inside the batch body: discard / dlq table (after the
-  sink load) / fail (before the sink sees any row) (entity/spec.go:21-26)
+  (`CompiledTransform.route`); each foreachBatch body hands the routed
+  frame and the post-hook to the stream's `BatchExecutor`
+  (engine/executor.py, shared with publish and process_batch)
+- HOUE as in the executor's table; under `default` a failed load
+  kills the query and the supervisor's restart replays the batch, while
+  a transform error (which a replay would repeat) is dropped. dlq takes
+  transform errors' raw values and a failed load's records as
+  `to_json(struct(*))` (entity/spec.go:21-26)
 - supervisor handles create/replace-on-version-bump/disable/shutdown
   (supervisor.go:154-250)
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import tempfile
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from geist_spark.compiler.analytics import apply_analytics, has_analytics
 from geist_spark.compiler.transform import compile_transform
+from geist_spark.engine.executor import BatchExecutor
+from geist_spark.engine.hooks import apply_post_hook_distributed, apply_pre_hook_distributed
 from geist_spark.engine.metrics import Metrics
-from geist_spark.sinks.base import Loader, SinkError
-from geist_spark.spec.model import (
-    HOUE_DISCARD,
-    HOUE_DLQ,
-    HOUE_FAIL,
-    Spec,
-)
+from geist_spark.sinks.base import Loader
+from geist_spark.spec.model import HOUE_DLQ, Spec
 
 log = logging.getLogger(__name__)
 
@@ -174,91 +175,22 @@ class StreamingStream:
     pre_hook: object = None
     post_hook: object = None
     metrics: Metrics = dc_field(default_factory=Metrics)
-    dlq: "DeadLetterQueue | None" = None
     query: StreamingQuery | None = None
     dlq_query: StreamingQuery | None = None
 
-    def start(self) -> StreamingQuery:
-        from geist_spark.engine.dlq import DeadLetterQueue
+    def __post_init__(self) -> None:
+        # built once: the DLQ and the counters outlive query restarts
+        self.executor = BatchExecutor(
+            self.spark, self.spec, self.loader, self.metrics, streaming=True
+        )
 
-        if self.dlq is None:
-            self.dlq = DeadLetterQueue(
-                self.spark,
-                self.spec.id,
-                self.spec.ops.custom_properties.get("dlqPath"),
-            )
+    def start(self) -> StreamingQuery:
         source = build_source_stream(
             self.spark, self.spec, self.env, self.source_factories
         )
         ct = compile_transform(self.spec)
-        houe = self.spec.ops.handling_of_unretryable_events
+        ex = self.executor
         value_col = self.value_col
-
-        retries = self.spec.ops.max_event_processing_retries
-        retry_backoff_ms = int(
-            self.spec.ops.custom_properties.get("retryBackoffMs", "2000")
-        )
-
-        def load_with_retry(out: DataFrame, epoch_id: int) -> None:
-            """Sink retry loop (executor.go:282-329): retryable errors
-            retried with doubling backoff; exhaustion or unretryable ->
-            HOUE. A raise kills the query; the supervisor's restart loop
-            + checkpoint replays the batch (at-least-once)."""
-            import time as _t
-
-            attempt = 0
-            while True:
-                try:
-                    self.loader.stream_load(out, epoch_id)
-                    self.metrics.sink_operations += 1
-                    return
-                except SinkError as e:
-                    if e.retryable and attempt < retries:
-                        attempt += 1
-                        _t.sleep(retry_backoff_ms / 1000.0 * (2 ** (attempt - 1)))
-                        continue
-                    if houe == HOUE_DISCARD:
-                        # count dropped EVENTS, not micro-batches, to
-                        # match the DLQ branch and the reference's
-                        # per-event counters (entity/common.go:36-62)
-                        self.metrics.events_failed += out.count()
-                        return
-                    if houe == HOUE_DLQ:
-                        self.metrics.events_failed += self.dlq.add_df(
-                            out.select(F.to_json(F.struct("*")).alias(value_col)),
-                            value_col=value_col,
-                            reason=f"sink error: {e}",
-                        )
-                        return
-                    raise
-
-        post_hook = self.post_hook
-        stream_id = self.spec.id
-
-        def process(routed: DataFrame, epoch_id: int) -> None:
-            """One routed micro-batch: persisted once, so the source is
-            scanned and parsed once for the sink and the DLQ (Spark's
-            foreachBatch pattern for several outputs)."""
-            from geist_spark.engine.hooks import apply_post_hook_distributed
-
-            self.metrics.microbatches += 1
-            routed.persist()
-            try:
-                bad = ct.errors(routed, value_col=value_col)
-                if houe == HOUE_FAIL and not bad.isEmpty():
-                    # before the sink sees any row of the batch
-                    raise RuntimeError(f"unretryable events in stream {stream_id}")
-                out = ct.records(routed)
-                if post_hook is not None:
-                    out = apply_post_hook_distributed(out, post_hook, stream_id)
-                load_with_retry(out, epoch_id)
-                if houe == HOUE_DLQ:
-                    # after the sink load; distributed parquet append
-                    self.metrics.events_failed += self.dlq.add_df(
-                        bad, value_col=value_col, reason="transform error"
-                    )
-            finally:
-                routed.unpersist()
 
         checkpoint = os.path.join(
             self.checkpoint_root or tempfile.mkdtemp(prefix="geist_ckpt_"),
@@ -293,7 +225,7 @@ class StreamingStream:
 
             def process_analytics(batch_df: DataFrame, epoch_id: int) -> None:
                 self.metrics.microbatches += 1
-                load_with_retry(batch_df, epoch_id)
+                ex.load(batch_df, epoch_id)
 
             agg = self.spec.transform.aggregate
             if agg is not None:
@@ -305,7 +237,7 @@ class StreamingStream:
             writer = (
                 data.writeStream.foreachBatch(process_analytics).outputMode(mode)
             )
-            if houe == HOUE_DLQ:
+            if ex.houe == HOUE_DLQ:
                 # parallel DLQ query: re-read the source and route
                 # transform-rejected raw events to the DLQ table. Own
                 # checkpoint; kafka re-consumes under a shadow group —
@@ -315,10 +247,13 @@ class StreamingStream:
                 )
 
                 def process_rejects(batch_df: DataFrame, epoch_id: int) -> None:
-                    bad = ct.rejected(batch_df, value_col=value_col)
-                    self.metrics.events_failed += self.dlq.add_df(
-                        bad, value_col=value_col, reason="transform error"
-                    )
+                    # routed once and persisted: the DLQ's empty probe
+                    # and its write read one parsed batch
+                    routed = ct.route(batch_df, value_col=value_col).persist()
+                    try:
+                        ex.dead_letter(ct.errors(routed, value_col), "transform error", value_col)
+                    finally:
+                        routed.unpersist()
 
                 self.dlq_query = (
                     dlq_source.writeStream.foreachBatch(process_rejects)
@@ -327,15 +262,15 @@ class StreamingStream:
                     .start()
                 )
         else:
-            if self.pre_hook is not None:
-                from geist_spark.engine.hooks import apply_pre_hook_distributed
-
-                source = apply_pre_hook_distributed(
-                    source, self.pre_hook, stream_id, value_col
-                )
+            sid, pre_hook, post_hook = self.spec.id, self.pre_hook, self.post_hook
+            if pre_hook is not None:
+                source = apply_pre_hook_distributed(source, pre_hook, sid, value_col)
+            shape = None if post_hook is None else functools.partial(
+                apply_post_hook_distributed, hook=post_hook, stream_id=sid
+            )
             # route once, at query start: every batch reuses the plan
             writer = ct.route(source, value_col=value_col).writeStream.foreachBatch(
-                process
+                functools.partial(ex.run_batch, ct, value_col=value_col, shape=shape)
             )
         self.query = (
             writer.option("checkpointLocation", checkpoint)

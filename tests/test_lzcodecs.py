@@ -92,6 +92,24 @@ def test_decompress_text_linked_block_frames(spark):
         assert r["text"] == data.decode()
 
 
+def test_decompress_text_lz4_behind_skippable_frame(spark):
+    """zstd and LZ4 share skippable frames: the sniff branches on the
+    magic of the first real frame behind them, not on the first one."""
+    from geist_spark.operators.prep import decompress_text
+
+    data = _doc(4, 2000)
+    pad = b"seek-index"
+    lz4 = struct.pack("<II", 0x184D2A50, len(pad)) + pad + _lz4(data)
+    zst = struct.pack("<II", 0x184D2A5E, len(pad)) + pad + pa.compress(
+        data, codec="zstd", asbytes=True
+    )
+    df = spark.createDataFrame([(0, lz4), (1, zst)], "doc_id long, payload binary")
+    got = {r["doc_id"]: r for r in decompress_text(df).collect()}
+    for i in (0, 1):
+        assert got[i]["byte_len"] == len(data)
+        assert got[i]["text"] == data.decode()
+
+
 @pytest.mark.parametrize(
     "data",
     [b"", b"x", b"ab" * 40000, _doc(3, 20000)],

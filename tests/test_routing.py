@@ -203,6 +203,22 @@ def test_process_batch_job_count(spark, tmp_path):
     assert eng.metrics(sid).events_failed == 1
 
 
+def test_publish_job_count(spark):
+    """The event row is a LocalTableScan, so the routed collect runs no
+    job: a passing publish runs only the void sink's write, an excluded
+    one none, and a rejected one (HOUE default = discard) counts its
+    one-row payload frame without a job."""
+    eng = Engine(spark)
+    sid = eng.register_stream(_spec(LOG_TRANSFORM, suffix="pubjobs"))
+    assert _jobs(spark, "route-publish-pass", lambda: eng.publish(sid, log_event(1))) == 1
+    excluded = log_event(2, kind="drop")
+    assert _jobs(spark, "route-publish-excluded", lambda: eng.publish(sid, excluded)) == 0
+    rejected = log_event(3, line="bad line")
+    assert _jobs(spark, "route-publish-rejected", lambda: eng.publish(sid, rejected)) == 0
+    m = eng.metrics(sid)
+    assert (m.events_excluded, m.events_failed) == (1, 1)
+
+
 def test_dlq_clean_batch_writes_no_file_and_counts_written_rows(spark, tmp_path):
     dlq_path = str(tmp_path / "dlq")
     eng = Engine(spark)

@@ -266,6 +266,9 @@ class Engine:
 
     def publish(self, stream_id: str, event: str | bytes) -> str:
         """Single-event synchronous ingestion (geist.go:123-145)."""
+        return self._enabled_stream(stream_id).publish(event)
+
+    def _enabled_stream(self, stream_id: str) -> Stream:
         stream = self._streams.get(stream_id)
         if stream is None:
             # disabled streams are popped from _streams on the registry
@@ -278,7 +281,7 @@ class Engine:
             raise KeyError(f"no such stream: {stream_id}")
         if stream.spec.disabled:
             raise RegistryError(f"stream {stream_id} is disabled")
-        return stream.publish(event)
+        return stream
 
     def process_batch(self, stream_id: str, df: DataFrame, value_col: str = "value") -> str:
         return self._streams[stream_id].process_batch(df, value_col=value_col)
@@ -317,15 +320,12 @@ class Engine:
 
     def all_metrics(self) -> "dict[str, Metrics]":
         """Per-stream metrics for every registered stream (reference
-        geist.Metrics, geist.go:59-66), batch + live streaming
-        combined."""
-        out: dict[str, Metrics] = {}
-        for sid, stream in self._streams.items():
-            out[sid] = stream.metrics
+        geist.Metrics, geist.go:59-66): each Stream's own counters,
+        which its streaming query shares, plus the admin stream's."""
+        out = {sid: stream.metrics for sid, stream in self._streams.items()}
         if self._supervisor is not None:
             for sid, ss in self._supervisor._streams.items():
-                base = out.get(sid)
-                out[sid] = base.add(ss.metrics) if base else ss.metrics
+                out.setdefault(sid, ss.metrics)
         return out
 
     def sync_from_registry(self) -> list[str]:
@@ -388,9 +388,7 @@ class Engine:
                     self.spark, env=self.registry.env
                 )
             self._admin_stream = self._supervisor.deploy(
-                spec,
-                self._loader_factories["admin"].create(self.spark, spec),
-                self._source_factories,
+                self._build_stream(spec, with_hooks=False), self._source_factories
             )
             return
         self._stop_admin = False
@@ -454,23 +452,16 @@ class Engine:
         return self.registry.all()
 
     def start_streaming(self, stream_id: str):
-        """Deploy the spec as a Structured Streaming query (eventsim /
-        kafka / file sources). Returns the StreamingStream handle."""
+        """Run the spec's Stream as a Structured Streaming query
+        (eventsim / kafka / file sources). Returns the StreamingStream
+        handle; the query shares the Stream's hooks, loader, executor,
+        DLQ and Metrics with publish and process_batch."""
         from geist_spark.streaming.runner import StreamingSupervisor
 
-        spec = self.registry.get(stream_id)
-        if spec is None:
-            raise KeyError(f"no such stream: {stream_id}")
+        stream = self._enabled_stream(stream_id)
         if self._supervisor is None:
             self._supervisor = StreamingSupervisor(self.spark, env=self.registry.env)
-        factory = self._loader_factories[spec.sink.type]
-        return self._supervisor.deploy(
-            spec,
-            factory.create(self.spark, spec),
-            self._source_factories,
-            pre_hook=self.pre_hook,
-            post_hook=self.post_hook,
-        )
+        return self._supervisor.deploy(stream, self._source_factories)
 
     def streaming_stream(self, stream_id: str):
         return self._supervisor.get(stream_id) if self._supervisor else None
@@ -486,13 +477,14 @@ class Engine:
             self._stop_admin = True
             self._admin_thread.join(timeout=10)
             self._admin_thread = None
+        # the queries first: they load through the streams' loaders
+        if self._supervisor is not None:
+            self._supervisor.shutdown()
         for s in self._streams.values():
             s.loader.shutdown()
         self._streams.clear()
         if self._registry_stream is not None:
             self._registry_stream.loader.shutdown()
-        if self._supervisor is not None:
-            self._supervisor.shutdown()
 
     # -- supervisor behavior (supervisor.go:154-250, simplified to the
     #    single-driver batch path; streaming queries in streaming/) ---
@@ -507,16 +499,14 @@ class Engine:
                 f"Stream {stream_id} is disabled, shutting down executor",
                 stream=stream_id,
             )
+            if self._supervisor is not None:
+                # disabled spec stops the live query (supervisor.go:220-236)
+                self._supervisor.stop(stream_id)
             old = self._streams.pop(stream_id, None)
             if old is not None:
                 old.loader.shutdown()
-            if self._supervisor is not None:
-                live = self._supervisor.get(stream_id)
-                if live is not None and spec is not None:
-                    # disabled spec stops the live query (supervisor.go:220-236)
-                    self._supervisor.deploy(spec, live.loader, self._source_factories)
             return
-        self._streams[stream_id] = self._build_stream(spec)
+        stream = self._streams[stream_id] = self._build_stream(spec)
         # supervisor.go:170 "Created executor ... for spec with ID"
         self.notifier.notify(
             "INFO", "supervisor",
@@ -526,14 +516,7 @@ class Engine:
         if self._supervisor is not None and self._supervisor.get(stream_id) is not None:
             # version bump while a streaming query is live: replace it
             # in place (supervisor.go:237-250 upgrade path)
-            factory = self._loader_factories[spec.sink.type]
-            self._supervisor.deploy(
-                spec,
-                factory.create(self.spark, spec),
-                self._source_factories,
-                pre_hook=self.pre_hook,
-                post_hook=self.post_hook,
-            )
+            self._supervisor.deploy(stream, self._source_factories)
 
     def _build_stream(self, spec: Spec, with_hooks: bool = True) -> Stream:
         factory = self._loader_factories.get(spec.sink.type)

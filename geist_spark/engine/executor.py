@@ -1,11 +1,12 @@
 """Batch executor: the one owner of the sink load, the HOUE policy and
 the dead-letter queue (executor.go:175-329: ProcessEvent -> loadToSink
-with retry -> HOUE). Publish, process_batch and the streaming runner
-keep their hooks and routing and call it. `load` retries a retryable
-`SinkError` `ops.maxEventProcessingRetries` times with doubling backoff
-(ops customProperties['retryBackoffMs'], default 2000 ms); an
-unretryable one, or retries run out, goes to HOUE like a transform
-error (entity/spec.go:21-26, 144-160), resolved once:
+with retry -> HOUE). Each spec's `Stream` builds one; publish,
+process_batch and the spec's streaming query keep their hooks and
+routing and call it. `load` retries a retryable `SinkError`
+`ops.maxEventProcessingRetries` times with doubling backoff (ops
+customProperties['retryBackoffMs'], default 2000 ms); an unretryable
+one, or retries run out, goes to HOUE like a transform error
+(entity/spec.go:21-26, 144-160):
 
   | HOUE    | unretryable events                                      |
   |---------|---------------------------------------------------------|
@@ -13,10 +14,11 @@ error (entity/spec.go:21-26, 144-160), resolved once:
   | dlq     | appended to the DLQ, counted as the rows appended       |
   | fail    | `UnretryableStreamError`, not counted: the caller, or   |
   |         | the supervisor's restart replaying the batch, owns them |
-  | default | discard on publish / process_batch; a streaming query   |
-  |         | fails on a failed load (a sink outage can clear before  |
-  |         | the restart replays the batch) and drops transform      |
-  |         | errors (a replay would only repeat them)                |
+  | default | a transform error is discarded on every path (a replay  |
+  |         | would only repeat it); a failed load resolves from its  |
+  |         | epoch: none (publish, process_batch) discards, an epoch |
+  |         | (a streaming batch) fails the batch, so the restart     |
+  |         | replays it once the sink is back                        |
 
 Callers pass the DLQ payload as a frame: publish the raw event, the
 batch paths the raw value of a transform error and `to_json(struct(*))`
@@ -50,17 +52,15 @@ class BatchExecutor:
     spec: Spec
     loader: Loader
     metrics: Metrics
-    streaming: bool = False
     notifier: Notifier | None = None
     dlq: DeadLetterQueue | None = field(default=None, init=False)
 
     def __post_init__(self) -> None:
         ops = self.spec.ops
         houe = ops.handling_of_unretryable_events
-        self.houe = self.transform_houe = houe
-        if houe == HOUE_DEFAULT:
-            self.houe = HOUE_FAIL if self.streaming else HOUE_DISCARD
-            self.transform_houe = HOUE_DISCARD
+        # `default`: discard, except a failed load with an epoch (`load`)
+        self.houe = HOUE_DISCARD if houe == HOUE_DEFAULT else houe
+        self.replay_failed_loads = houe == HOUE_DEFAULT
         self.retries = ops.max_event_processing_retries
         self.backoff_s = int(ops.custom_properties.get("retryBackoffMs", "2000")) / 1000
 
@@ -73,11 +73,11 @@ class BatchExecutor:
         routed.persist()
         try:
             bad = ct.errors(routed, value_col=value_col)
-            if self.transform_houe == HOUE_FAIL and not bad.isEmpty():
+            if self.houe == HOUE_FAIL and not bad.isEmpty():
                 raise UnretryableStreamError(f"unretryable events in {self.spec.id}: transform error")
             out = ct.records(routed)
             rid = self.load(out if shape is None else shape(out), epoch_id)
-            if self.transform_houe == HOUE_DLQ:
+            if self.houe == HOUE_DLQ:
                 self.dead_letter(bad, "transform error", value_col)
             return rid or ""
         finally:
@@ -99,18 +99,21 @@ class BatchExecutor:
                     continue
                 if rejects is None:
                     rejects = out.select(F.to_json(F.struct("*")).alias("value"))
-                self.unretryable(rejects, f"sink error: {e}")
+                replay = self.replay_failed_loads and epoch_id is not None
+                self.unretryable(rejects, f"sink error: {e}", HOUE_FAIL if replay else self.houe)
                 return None
             self.metrics.sink_operations += 1
             self.metrics.sink_processing_time_micros += int((time.perf_counter() - t0) * 1e6)
             return rid
 
-    def unretryable(self, rejects: DataFrame, reason: str, value_col="value") -> None:
-        """HOUE for a frame of payloads in `value_col`."""
-        if self.houe == HOUE_FAIL:
+    def unretryable(self, rejects: DataFrame, reason: str, houe: str | None = None) -> None:
+        """HOUE (default: the resolved policy) for a frame of payloads
+        in a `value` column."""
+        houe = houe or self.houe
+        if houe == HOUE_FAIL:
             raise UnretryableStreamError(f"unretryable events in {self.spec.id}: {reason}")
-        if self.houe == HOUE_DLQ:
-            self.dead_letter(rejects, reason, value_col)
+        if houe == HOUE_DLQ:
+            self.dead_letter(rejects, reason)
         else:
             # a driver-local frame (publish's raw event) counts without a job
             self.metrics.events_failed += len(rejects.collect()) if rejects.isLocal() else rejects.count()

@@ -2,9 +2,14 @@
 
 Mirrors entity/hook.go:5-30 and the executor's action handling
 (internal/pkg/engine/executor.go:202-280). Hooks run:
-- publish (single-event batch) path: per event, driver-side;
-- streaming path: per micro-batch inside foreachBatch, via
-  `apply_hook_to_pandas` (Arrow batches, not per-row Python).
+- publish (single-event batch) path: per event, driver-side, where
+  the error actions send the raw event to HOUE;
+- process_batch and the streaming query: distributed over Arrow
+  batches (`mapInPandas`, not per-row JVM calls) by
+  `apply_pre_hook_distributed` on the source before routing (a
+  streaming query applies it once, at query start) and
+  `apply_post_hook_distributed` on the records before analytics and
+  the sink (`Stream.route_batch` / `Stream.shape`).
 """
 
 from __future__ import annotations

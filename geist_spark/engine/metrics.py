@@ -1,11 +1,12 @@
 """Per-stream metrics, shaped like the reference's Metrics struct
-(entity/common.go:36-62) and aggregated across executors by the
-supervisor (supervisor.go:105-131). Streaming queries additionally
-surface `StreamingQuery.lastProgress` through the same shape."""
+(entity/common.go:36-62). One per spec's Stream, shared by publish,
+process_batch and the spec's streaming query (the reference sums its
+executors' counters per spec, supervisor.go:105-131); the query's
+listener adds `numInputRows` from its progress events."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -21,14 +22,6 @@ class Metrics:
     events_excluded: int = 0
     events_failed: int = 0
     stream_restarts: int = 0
-
-    def add(self, other: "Metrics") -> "Metrics":
-        return Metrics(
-            **{
-                k: getattr(self, k) + getattr(other, k)
-                for k in self.__dataclass_fields__
-            }
-        )
 
 
 @dataclass

@@ -1,15 +1,20 @@
 """Stream: one registered spec bound to source -> compiled transform ->
-sink, with the synchronous event paths.
+sink. The engine builds one per spec; publish, process_batch and the
+spec's streaming query (streaming/runner.py) all run through it, so
+they share its hooks, loader, executor, DLQ and Metrics.
 
 Mirrors internal/pkg/engine/stream.go:11-36 and executor.go:175-329:
-hooks -> transform -> load-with-retry -> HOUE. Both paths route every
-event once (`CompiledTransform.route`) and run their hooks; the
+hooks -> transform -> load-with-retry -> HOUE. Every path routes each
+event once (`CompiledTransform.route`) and runs the hooks; the
 stream's `BatchExecutor` (engine/executor.py) owns the sink load, HOUE
-(`default` = discard here) and the DLQ. Loads carry no epoch, so an
-epochIdempotent table appends them. Publish (geistapi) decides error /
-excluded / load from one collect of its routed row, dead-letters the
-raw event, and returns the sink resource id: the reference's
-channel-source ack contract (internal/pkg/entity/channel/extractor.go:46-98).
+and the DLQ. Publish (geistapi) runs the hooks per event and decides
+error / excluded / load from one collect of its routed row,
+dead-letters the raw event, and returns the sink resource id: the
+reference's channel-source ack contract
+(internal/pkg/entity/channel/extractor.go:46-98). The batch paths run
+the hooks distributed: `route_batch` (pre-hook, then route) builds the
+plan and `run_routed` loads one routed batch (post-hook, then analytics)
+with the batch's epoch, or none for process_batch.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from geist_spark.compiler.analytics import apply_analytics
 from geist_spark.compiler.transform import (
     OUTCOME_COL,
     OUTCOME_ERROR,
@@ -31,6 +37,8 @@ from geist_spark.engine.hooks import (
     HookAction,
     PostTransformHook,
     PreTransformHook,
+    apply_post_hook_distributed,
+    apply_pre_hook_distributed,
 )
 from geist_spark.engine.metrics import Metrics, Notifier
 from geist_spark.functions.localdf import local_df
@@ -127,18 +135,29 @@ class Stream:
         self.executor.unretryable(self._raw(event), reason)
         return ""
 
-    # -- batch path: run a whole DataFrame of events through ---------
+    # -- batch paths: process_batch and the streaming query ---------
+
+    def route_batch(self, df: DataFrame, value_col: str = "value") -> DataFrame:
+        """The distributed pre-hook, then `route`: a static batch, or a
+        streaming source routed once at query start."""
+        if self.pre_hook is not None:
+            df = apply_pre_hook_distributed(df, self.pre_hook, self.spec.id, value_col)
+        return self.transform.route(df, value_col=value_col)
+
+    def shape(self, out: DataFrame, join_right_df: DataFrame | None = None) -> DataFrame:
+        """Records -> sink rows: the distributed post-hook, then the
+        analytics sections."""
+        if self.post_hook is not None:
+            out = apply_post_hook_distributed(out, self.post_hook, self.spec.id)
+        return apply_analytics(out, self.spec.transform, join_right_df=join_right_df)
+
+    def run_routed(self, routed: DataFrame, epoch_id=None, value_col: str = "value") -> str:
+        """Load one routed batch; a streaming query's foreachBatch body
+        (its epoch) and process_batch (none)."""
+        return self.executor.run_batch(self.transform, routed, epoch_id, value_col, self.shape)
 
     def process_batch(self, events_df: DataFrame, value_col: str = "value") -> str:
-        """foreachBatch body: transform (+ analytics sections) + load
-        one micro-batch. The geistapi single-event publish path skips
-        analytics — dedup/aggregate are stream-level operators."""
-        from geist_spark.compiler.analytics import apply_analytics
-
-        ct = self.transform
-        return self.executor.run_batch(
-            ct,
-            ct.route(events_df, value_col=value_col),
-            value_col=value_col,
-            shape=lambda out: apply_analytics(out, self.spec.transform),
-        )
+        """Hooks + transform (+ analytics sections) + load of one static
+        batch. The geistapi single-event publish path skips analytics:
+        dedup/aggregate are stream-level operators."""
+        return self.run_routed(self.route_batch(events_df, value_col), value_col=value_col)

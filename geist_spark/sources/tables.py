@@ -13,13 +13,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# (sf_dir, name) -> inferred StructType. Schema inference on a parquet
-# path runs a footer-reading Spark JOB per read (measured ~50x the
-# cost of an explicit schema), and every query rebuild re-reads its
-# tables — across a 279-query bench that is hundreds of redundant
-# inference jobs. This caches METADATA only (a pure-Python StructType,
-# no JVM references, safe across session restarts): every read still
-# scans the parquet data itself. Test tables are immutable per sf_dir.
+# (sf_dir, name) -> (freshness token, inferred StructType). Schema
+# inference on a parquet path runs a footer-reading Spark JOB per read
+# (measured ~50x the cost of an explicit schema), and every query
+# rebuild re-reads its tables — across a 279-query bench that is
+# hundreds of redundant inference jobs. This caches METADATA only (a
+# pure-Python StructType, no JVM references, safe across session
+# restarts): every read still scans the parquet data itself. One entry
+# per table: a rewrite replaces it instead of adding one.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -27,20 +28,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    # freshness token (ADVICE r9): a fixture that rewrites a table at
-    # the same path changes the directory mtime, invalidating the
-    # cached schema instead of silently applying a stale one. One
-    # local stat() vs a footer-reading Spark job per read.
+    # freshness token: a fixture that rewrites a table at the same path
+    # changes its mtime or size, invalidating the cached schema instead
+    # of silently applying a stale one. One local stat() vs a
+    # footer-reading Spark job per read.
     try:
-        token = os.path.getmtime(path)
+        st = os.stat(path)
+        token = (st.st_mtime_ns, st.st_size)
     except OSError:
         token = None
-    sch = _SCHEMA_CACHE.get((sf_dir, name, token))
-    if sch is None:
+    hit = _SCHEMA_CACHE.get((sf_dir, name))
+    if hit is None or hit[0] != token:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[(sf_dir, name, token)] = df.schema
+        _SCHEMA_CACHE[(sf_dir, name)] = (token, df.schema)
     else:
-        df = spark.read.schema(sch).parquet(path)
+        df = spark.read.schema(hit[1]).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

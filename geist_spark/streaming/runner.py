@@ -1,5 +1,5 @@
-"""Structured Streaming runner: spec -> readStream -> compiled
-transform -> foreachBatch(loader), plus the supervisor that owns
+"""Structured Streaming runner: spec -> readStream -> the engine's
+`Stream` for the spec -> foreachBatch, plus the supervisor that owns
 StreamingQuery lifecycles.
 
 Mirrors the reference's executor/supervisor semantics
@@ -9,15 +9,19 @@ Mirrors the reference's executor/supervisor semantics
   README.md:406-415)
 - at-least-once with ack-after-sink: checkpointed micro-batches +
   sink write inside foreachBatch (executor.go:168-170)
-- one pass per micro-batch: the stream is routed once at query start
-  (`CompiledTransform.route`); each foreachBatch body hands the routed
-  frame and the post-hook to the stream's `BatchExecutor`
-  (engine/executor.py, shared with publish and process_batch)
+- one Stream per spec: the query runs the Stream that publish and
+  process_batch use (engine/stream.py), so its hooks, loader,
+  `BatchExecutor`, DLQ and Metrics are shared; the query handle owns
+  only the queries and the checkpoint
+- one pass per micro-batch: the source is pre-hooked and routed once
+  at query start (`Stream.route_batch`); each foreachBatch body is
+  `Stream.run_routed` with the batch's epoch (post-hook, analytics,
+  load, DLQ)
 - HOUE as in the executor's table; under `default` a failed load
-  kills the query and the supervisor's restart replays the batch, while
-  a transform error (which a replay would repeat) is dropped. dlq takes
-  transform errors' raw values and a failed load's records as
-  `to_json(struct(*))` (entity/spec.go:21-26)
+  kills the query (the batch has an epoch) and the supervisor's
+  restart replays the batch, while a transform error (which a replay
+  would repeat) is dropped. dlq takes transform errors' raw values and
+  a failed load's records as `to_json(struct(*))` (entity/spec.go:21-26)
 - supervisor handles create/replace-on-version-bump/disable/shutdown
   (supervisor.go:154-250)
 """
@@ -28,16 +32,15 @@ import functools
 import logging
 import os
 import tempfile
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from geist_spark.compiler.analytics import apply_analytics, has_analytics
+from geist_spark.compiler.analytics import has_analytics
 from geist_spark.compiler.transform import compile_transform
-from geist_spark.engine.executor import BatchExecutor
-from geist_spark.engine.hooks import apply_post_hook_distributed, apply_pre_hook_distributed
 from geist_spark.engine.metrics import Metrics
+from geist_spark.engine.stream import Stream
 from geist_spark.sinks.base import Loader
 from geist_spark.spec.model import HOUE_DLQ, Spec
 
@@ -163,41 +166,39 @@ def _topics_for_env(cc: dict, env: str) -> list[str]:
 
 @dataclass
 class StreamingStream:
-    """A deployed streaming pipeline: source -> transform -> sink."""
+    """A spec's streaming query over the engine's `Stream`: source ->
+    `stream.route_batch` -> foreachBatch(`stream.run_routed`). The
+    Stream (hooks, loader, executor, DLQ, Metrics) is the one publish
+    and process_batch use, and it outlives the query's restarts; this
+    handle owns only the queries and their checkpoint."""
 
-    spark: SparkSession
-    spec: Spec
-    loader: Loader
+    stream: Stream
+    checkpoint: str
     env: str = ""
-    checkpoint_root: str = ""
     value_col: str = "value"
     source_factories: dict | None = None
-    pre_hook: object = None
-    post_hook: object = None
-    metrics: Metrics = dc_field(default_factory=Metrics)
     query: StreamingQuery | None = None
     dlq_query: StreamingQuery | None = None
 
-    def __post_init__(self) -> None:
-        # built once: the DLQ and the counters outlive query restarts
-        self.executor = BatchExecutor(
-            self.spark, self.spec, self.loader, self.metrics, streaming=True
-        )
+    @property
+    def spec(self) -> Spec:
+        return self.stream.spec
+
+    @property
+    def metrics(self) -> Metrics:
+        return self.stream.metrics
+
+    @property
+    def loader(self) -> Loader:
+        return self.stream.loader
+
+    def _source(self, spec: Spec) -> DataFrame:
+        return build_source_stream(self.stream.spark, spec, self.env, self.source_factories)
 
     def start(self) -> StreamingQuery:
-        source = build_source_stream(
-            self.spark, self.spec, self.env, self.source_factories
-        )
-        ct = compile_transform(self.spec)
-        ex = self.executor
-        value_col = self.value_col
-
-        checkpoint = os.path.join(
-            self.checkpoint_root or tempfile.mkdtemp(prefix="geist_ckpt_"),
-            self.spec.id,
-            f"v{self.spec.version}",
-        )
-        if has_analytics(self.spec.transform):
+        st, spec, value_col = self.stream, self.spec, self.value_col
+        source = self._source(spec)
+        if has_analytics(spec.transform):
             # analytics mode: the stateful operators (windowed agg,
             # watermark dedup, stream-stream join) must live on the
             # STREAMING DataFrame — inside foreachBatch they would only
@@ -206,28 +207,20 @@ class StreamingStream:
             # over a second read of the source (below): rejected events
             # can't be observed from inside the stateful plan.
             right = None
-            j = self.spec.transform.join
+            j = spec.transform.join
             if j is not None and j.stream is not None:
                 from geist_spark.spec.model import join_stream_spec
 
-                rspec = join_stream_spec(self.spec)
-                rsource = build_source_stream(
-                    self.spark, rspec, self.env, self.source_factories
-                )
-                right = compile_transform(rspec).apply(
-                    rsource, value_col=self.value_col
-                )
-            data = apply_analytics(
-                ct.apply(source, value_col=value_col),
-                self.spec.transform,
-                join_right_df=right,
-            )
+                rspec = join_stream_spec(spec)
+                right = compile_transform(rspec).apply(self._source(rspec), value_col=value_col)
+            data = st.shape(st.transform.records(st.route_batch(source, value_col)),
+                            join_right_df=right)
 
             def process_analytics(batch_df: DataFrame, epoch_id: int) -> None:
-                self.metrics.microbatches += 1
-                ex.load(batch_df, epoch_id)
+                st.metrics.microbatches += 1
+                st.executor.load(batch_df, epoch_id)
 
-            agg = self.spec.transform.aggregate
+            agg = spec.transform.aggregate
             if agg is not None:
                 mode = agg.output_mode
             elif j is not None and j.stream is not None:
@@ -237,46 +230,38 @@ class StreamingStream:
             writer = (
                 data.writeStream.foreachBatch(process_analytics).outputMode(mode)
             )
-            if ex.houe == HOUE_DLQ:
+            if st.executor.houe == HOUE_DLQ:
                 # parallel DLQ query: re-read the source and route
                 # transform-rejected raw events to the DLQ table. Own
                 # checkpoint; kafka re-consumes under a shadow group —
                 # the cost of keeping the main plan purely stateful.
-                dlq_source = build_source_stream(
-                    self.spark, self.spec, self.env, self.source_factories
-                )
-
                 def process_rejects(batch_df: DataFrame, epoch_id: int) -> None:
                     # routed once and persisted: the DLQ's empty probe
                     # and its write read one parsed batch
-                    routed = ct.route(batch_df, value_col=value_col).persist()
+                    routed = st.route_batch(batch_df, value_col).persist()
                     try:
-                        ex.dead_letter(ct.errors(routed, value_col), "transform error", value_col)
+                        st.executor.dead_letter(
+                            st.transform.errors(routed, value_col), "transform error", value_col
+                        )
                     finally:
                         routed.unpersist()
 
                 self.dlq_query = (
-                    dlq_source.writeStream.foreachBatch(process_rejects)
-                    .option("checkpointLocation", checkpoint + "_dlq")
-                    .queryName(f"{self.spec.id}-dlq")
+                    self._source(spec).writeStream.foreachBatch(process_rejects)
+                    .option("checkpointLocation", self.checkpoint + "_dlq")
+                    .queryName(f"{spec.id}-dlq")
                     .start()
                 )
         else:
-            sid, pre_hook, post_hook = self.spec.id, self.pre_hook, self.post_hook
-            if pre_hook is not None:
-                source = apply_pre_hook_distributed(source, pre_hook, sid, value_col)
-            shape = None if post_hook is None else functools.partial(
-                apply_post_hook_distributed, hook=post_hook, stream_id=sid
-            )
             # route once, at query start: every batch reuses the plan
-            writer = ct.route(source, value_col=value_col).writeStream.foreachBatch(
-                functools.partial(ex.run_batch, ct, value_col=value_col, shape=shape)
+            writer = st.route_batch(source, value_col).writeStream.foreachBatch(
+                functools.partial(st.run_routed, value_col=value_col)
             )
         self.query = (
-            writer.option("checkpointLocation", checkpoint)
-            .trigger(processingTime=f"{self.spec.ops.micro_batch_timeout_ms} milliseconds"
-                     if self.spec.ops.micro_batch else "0 seconds")
-            .queryName(self.spec.id)
+            writer.option("checkpointLocation", self.checkpoint)
+            .trigger(processingTime=f"{spec.ops.micro_batch_timeout_ms} milliseconds"
+                     if spec.ops.micro_batch else "0 seconds")
+            .queryName(spec.id)
             .start()
         )
         return self.query
@@ -368,34 +353,26 @@ class StreamingSupervisor:
         self._listener = _MetricsListener(self)
         spark.streams.addListener(self._listener)
 
-    def deploy(
-        self,
-        spec: Spec,
-        loader: Loader,
-        source_factories: dict | None = None,
-        pre_hook: object = None,
-        post_hook: object = None,
-    ) -> StreamingStream:
-        """Create or replace (version upgrade) the stream for a spec
-        (supervisor.go:220-250)."""
-        old = self._streams.pop(spec.id, None)
-        if old is not None:
-            old.stop()
-        if spec.disabled:
-            return old
+    def deploy(self, stream: Stream, source_factories: dict | None = None) -> StreamingStream:
+        """Start the query for a spec's Stream, replacing (version
+        upgrade) the spec's live query (supervisor.go:220-250)."""
+        spec = stream.spec
+        self.stop(spec.id)
         ss = StreamingStream(
-            spark=self.spark,
-            spec=spec,
-            loader=loader,
+            stream,
+            os.path.join(self.checkpoint_root, spec.id, f"v{spec.version}"),
             env=self.env,
-            checkpoint_root=self.checkpoint_root,
             source_factories=source_factories,
-            pre_hook=pre_hook,
-            post_hook=post_hook,
         )
         ss.start()
         self._streams[spec.id] = ss
         return ss
+
+    def stop(self, stream_id: str) -> None:
+        """Stop and drop a spec's query (disable, replace)."""
+        ss = self._streams.pop(stream_id, None)
+        if ss is not None:
+            ss.stop()
 
     def get(self, stream_id: str) -> StreamingStream | None:
         return self._streams.get(stream_id)
@@ -466,6 +443,3 @@ class StreamingSupervisor:
             except Exception:
                 pass
             self._listener = None
-
-    def metrics(self) -> dict[str, Metrics]:
-        return {sid: ss.metrics for sid, ss in self._streams.items()}

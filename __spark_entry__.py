@@ -4424,13 +4424,14 @@ def w_pb_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def w_yaml_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """YAML safe-subset parsing under the oracle gate (operators/
-    yamlsub.py): a per-doc config document exercising block mappings,
-    nested maps, flow sequences with quoted members, sequence items
-    that are inline mappings, a plain scalar item, a literal block
-    scalar, comments, and core-schema typing (int/bool/null). The
-    whole fixture is JVM-concat text; the oracle rebuilds record_json
-    character-exactly from doc_id — an indentation, scalar-typing,
-    block-chomping, or flow-split bug hash-mismatches."""
+    yamlsub.py, one pass over libyaml's events): a per-doc config
+    document exercising block mappings, nested maps, flow sequences
+    with quoted members, sequence items that are inline mappings, a
+    plain scalar item, a literal block scalar, comments, and the
+    plain-scalar typing (int/bool/null). The whole fixture is
+    JVM-concat text; the oracle rebuilds record_json character-exactly
+    from doc_id — a scalar-typing, key-order, block-chomping or
+    JSON-rendering bug hash-mismatches."""
     from geist_spark.operators.yamlsub import yaml_records
 
     docs = _t(spark, sf_dir, "documents")

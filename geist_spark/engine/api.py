@@ -355,8 +355,8 @@ class Engine:
         registered on any pod publishes an AdminEvent to the shared
         admin topic; every pod holds a UNIQUE subscription and on
         receipt loads changed specs from shared registry storage and
-        redeploys (supervisor.go:288-317). Replaces blind polling
-        (`start_registry_sync`) with notification-triggered sync.
+        redeploys (supervisor.go:288-317): sync is triggered by
+        notification, not by polling the registry.
 
         mode='thread': lightweight driver-side pull loop on the
           emulator client — no Spark query (the reference's default
@@ -409,29 +409,6 @@ class Engine:
         )
         self._admin_thread.start()
 
-    def start_registry_sync(self, poll_s: float = 5.0) -> None:
-        """Background poller calling sync_from_registry — the always-on
-        equivalent of the reference's admin-event subscription."""
-        import threading
-        import time
-
-        if getattr(self, "_sync_thread", None) is not None:
-            return
-        self._stop_sync = False
-
-        def loop() -> None:
-            while not self._stop_sync:
-                try:
-                    self.sync_from_registry()
-                except Exception:  # storage briefly unreadable mid-write
-                    pass
-                time.sleep(poll_s)
-
-        self._sync_thread = threading.Thread(
-            target=loop, daemon=True, name="geist-registry-sync"
-        )
-        self._sync_thread.start()
-
     def notification_channel(self) -> Notifier:
         """The engine's operational-event channel (reference
         geist.NotificationChannel, geist.go): read `events` for history
@@ -469,10 +446,6 @@ class Engine:
     def shutdown(self) -> None:
         # supervisor.go:135 "Shutting down"
         self.notifier.notify("INFO", "supervisor", "Shutting down")
-        if getattr(self, "_sync_thread", None) is not None:
-            self._stop_sync = True
-            self._sync_thread.join(timeout=10)
-            self._sync_thread = None
         if getattr(self, "_admin_thread", None) is not None:
             self._stop_admin = True
             self._admin_thread.join(timeout=10)

@@ -11,8 +11,8 @@ malformed (reserved type bytes, truncation, trailing bytes) — there
 is no capability tier (the full format decodes).
 
 The paired encoder emits canonical minimal encodings and backs the
-oracle fixtures. One Arrow mapInPandas stage for the DataFrame
-surface, zero shuffle. Reference parity: n/a (geist is JSON-only).
+oracle fixtures. The DataFrame surface is the shared records stage
+(operators/records.py). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
@@ -23,10 +23,7 @@ import struct
 
 from pyspark.sql import DataFrame
 
-MSGPACK_RECORDS_SCHEMA = "file_id long, record_json string"
-
-import base64
-import struct
+from geist_spark.operators.records import records_stage
 
 
 def _err(msg):
@@ -212,8 +209,6 @@ def mp_encode(v):
     raise AssertionError(f"unencodable {type(v)}")
 
 
-
-
 def mp_decode_records(
     files: DataFrame,
     payload_col: str = "payload",
@@ -221,22 +216,7 @@ def mp_decode_records(
     max_elements: int = 1_000_000,
 ) -> DataFrame:
     """(id, payload) -> (file_id, record_json) compact JSON."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "record_json": []}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                out["file_id"].append(fid)
-                out["record_json"].append(
-                    json.dumps(
-                        mp_decode(bytes(payload), max_elements),
-                        separators=(",", ":"),
-                        ensure_ascii=False,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, MSGPACK_RECORDS_SCHEMA)
+    return records_stage(
+        files, lambda b: mp_decode(bytes(b), max_elements), payload_col,
+        id_col,
+    )

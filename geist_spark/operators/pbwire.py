@@ -18,18 +18,18 @@ Dialect (documented, oracle-replayable):
 - repeated occurrences of a field collect into a JSON array,
 - deprecated group wire types (3/4) are MALFORMED (ValueError).
 
-One Arrow mapInPandas stage, zero shuffle (the avro_records shape).
+The DataFrame surface is the shared records stage (operators/
+records.py).
 Reference parity: n/a (geist is JSON-only); extension surface.
 """
 
 from __future__ import annotations
 
 import base64
-import json
 
 from pyspark.sql import DataFrame
 
-PB_RECORDS_SCHEMA = "file_id long, record_json string"
+from geist_spark.operators.records import records_stage
 
 
 def _err(msg: str) -> ValueError:
@@ -133,25 +133,9 @@ def pb_decode_records(
 ) -> DataFrame:
     """(id, payload) -> (file_id, record_json): schema-less decode of
     one protobuf message per row, rendered as compact JSON."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "record_json": []}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                out["file_id"].append(fid)
-                out["record_json"].append(
-                    json.dumps(
-                        pb_decode(bytes(payload)),
-                        separators=(",", ":"),
-                        ensure_ascii=False,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, PB_RECORDS_SCHEMA)
+    return records_stage(
+        files, lambda b: pb_decode(bytes(b)), payload_col, id_col
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -8,20 +8,19 @@ order preserved. plistlib errors map to the malformed ValueError
 tier; payloads that are neither XML-plist-shaped nor bplist00 are a
 CAPABILITY limit.
 
-One Arrow mapInPandas stage (the toml_records shape). Reference
-parity: n/a (geist is JSON-only).
+The DataFrame surface is the shared records stage (operators/
+records.py). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
 
 import base64
 import datetime
-import json
 import plistlib
 
 from pyspark.sql import DataFrame
 
-PLIST_RECORDS_SCHEMA = "file_id long, record_json string"
+from geist_spark.operators.records import records_stage
 
 
 def _jsonable(v):
@@ -58,31 +57,7 @@ def plist_records(
     on_unsupported: str = "error",
 ) -> DataFrame:
     """(id, plist bytes) -> (file_id, record_json) compact JSON."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be \'error\' or \'null\'")
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "record_json": []}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    val = plist_parse(bytes(payload))
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                out["file_id"].append(fid)
-                out["record_json"].append(
-                    json.dumps(
-                        val, separators=(",", ":"), ensure_ascii=False
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, PLIST_RECORDS_SCHEMA)
+    return records_stage(
+        files, lambda b: plist_parse(bytes(b)), payload_col, id_col,
+        on_unsupported,
+    )

@@ -1,27 +1,26 @@
 """TOML parsing for config/repo corpora (pyproject/Cargo/CI files).
 
-Unlike YAML (yamlsub.py's from-scratch safe subset), TOML 1.0 ships
-in the Python 3.11 stdlib as `tomllib` — so this operator is the
-full language: tables, arrays of tables, dotted keys, all string
-forms, underscore/hex/oct/bin integers, floats, booleans, arrays,
-inline tables, and datetimes. Rendering follows the repo's shared
+TOML 1.0 ships in the Python 3.11 stdlib as `tomllib`, so this
+operator is the full language (yamlsub.py, by contrast, is a safe
+subset over libyaml's events): tables, arrays of tables, dotted keys,
+all string forms, underscore/hex/oct/bin integers, floats, booleans,
+arrays, inline tables, and datetimes. Rendering follows the repo's shared
 deterministic-JSON dialect: compact separators, insertion order,
 datetime/date/time values as ISO-8601 strings. TOMLDecodeError maps
 to the malformed ValueError tier; there is no capability tier.
 
-One Arrow mapInPandas stage (the yaml_records shape), zero shuffle.
-Reference parity: n/a (geist is JSON-only).
+The DataFrame surface is the shared records stage (operators/
+records.py). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
 
 import datetime
-import json
 import tomllib
 
 from pyspark.sql import DataFrame
 
-TOML_RECORDS_SCHEMA = "file_id long, record_json string"
+from geist_spark.operators.records import records_stage
 
 
 def _jsonable(v):
@@ -48,22 +47,4 @@ def toml_records(
     id_col: str = "file_id",
 ) -> DataFrame:
     """(id, toml text) -> (file_id, record_json) compact JSON."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "record_json": []}
-            for fid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                out["file_id"].append(fid)
-                out["record_json"].append(
-                    json.dumps(
-                        toml_parse(text),
-                        separators=(",", ":"),
-                        ensure_ascii=False,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, TOML_RECORDS_SCHEMA)
+    return records_stage(files, toml_parse, text_col, id_col)

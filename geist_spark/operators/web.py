@@ -535,7 +535,9 @@ def _mislabel_sniff(
          body that STRICT-decodes as utf-8 with at least one
          multi-byte sequence. Valid multi-byte UTF-8 arising by
          accident in legacy bytes is statistically negligible — this
-         is the classic 'cafÃ©' mojibake, reversed.
+         is the classic 'cafÃ©' mojibake, reversed. A UTF-16/32
+         label is exempt: those bytes are not ASCII-compatible, and
+         a UTF-16 surrogate pair can strict-decode as UTF-8.
       3. For UNDECLARED non-UTF-8 bodies (the cp1252 fallback tier)
          and declared-utf-8 bodies that produced replacements:
          a) Shift-JIS when the body strict-decodes and yields >=4
@@ -553,6 +555,8 @@ def _mislabel_sniff(
     Declared-but-wrong LEGACY labels (e.g. declared cp1252, actual
     GBK) stay as declared — without a declaration mismatch signal or
     a utf-8 validity proof there is no high-confidence correction."""
+    import codecs
+
     if ("\x1b$B" in text or "\x1b$@" in text) and not cs.startswith(
         "iso-2022"
     ):
@@ -562,7 +566,9 @@ def _mislabel_sniff(
             pass
     has_high = any(c >= 0x80 for c in b)
     if src in ("header", "meta") and cs not in ("utf-8", "utf8"):
-        if has_high:
+        if has_high and not codecs.lookup(cs).name.startswith(
+            ("utf-16", "utf-32")
+        ):
             try:
                 return b.decode("utf-8"), "utf-8", "sniff"
             except UnicodeDecodeError:

@@ -1,37 +1,42 @@
 """YAML safe-subset parsing for config/repo corpora.
 
 Repository and documentation crawls are full of YAML (CI configs,
-front matter, k8s manifests, metadata sidecars); this parses the
-SAFE SUBSET those files actually use — block mappings and sequences
-by indentation, flow [] / {} one level deep inside a line, plain and
-single/double-quoted scalars, '#' comments, document markers, literal
-(|) and folded (>) block scalars with strip/keep chomping, and the
-core JSON-ish scalar types (null/true/false/int/float per YAML 1.2
-core schema) — rendered into the repo's shared deterministic-JSON
-dialect.
+front matter, k8s manifests, metadata sidecars). libyaml's C scanner
+and parser (PyYAML's `CSafeLoader`) read the text; one pass over its
+event stream builds dicts and lists on an explicit stack — no
+`Composer`/`Constructor`, which recurse in Python — and renders the
+repo's shared deterministic-JSON dialect:
+
+- only PLAIN scalars are typed: `null`/`~`/empty -> null,
+  `true`/`false`, `[+-]digits` -> int (`0777` -> 777) and decimal
+  floats; everything else (`0x1F`, `0o17`, `1e3`, `.inf`, `Null`,
+  `TRUE`, `yes`, dates) and every quoted or block scalar is a string;
+- a non-string scalar key is stringified (`true:` -> "True").
 
 Deliberate CAPABILITY limits (NotImplementedError): anchors/aliases
-(&/*— the billion-laughs axis), tags (!!), merge keys (<<), multiple
-documents per payload, tabs as indentation, and complex (non-scalar)
-mapping keys. Structural damage (bad indentation jumps, unterminated
-quotes/flow, duplicate keys) is MALFORMED (ValueError). A nesting cap
-and an element budget bound adversarial inputs.
+(the billion-laughs axis), any explicit tag (`!!int`, `!`), a plain
+`<<` merge key, complex (collection) mapping keys, a second document,
+and tab characters anywhere. MALFORMED (ValueError "malformed YAML"):
+any libyaml error, duplicate keys, nesting deeper than 32 and an
+exhausted element budget. See DIALECT.md "YAML".
 
-One Arrow mapInPandas stage for the DataFrame surface (the
-avro_records shape). Reference parity: n/a (geist is JSON-only).
+The DataFrame surface is the shared records stage (operators/
+records.py). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
 
-import json
 import re
 
+import yaml
 from pyspark.sql import DataFrame
 
-YAML_RECORDS_SCHEMA = "file_id long, record_json string"
+from geist_spark.operators.records import records_stage
 
 _INT_RE = re.compile(r"^[+-]?\d+$")
 _FLOAT_RE = re.compile(r"^[+-]?(\d+\.\d*|\.\d+)([eE][+-]?\d+)?$")
+_MAX_DEPTH = 32
+_NO_KEY = object()  # a mapping frame waiting for its next key
 
 
 def _err(msg: str) -> ValueError:
@@ -57,360 +62,69 @@ def _scalar(tok: str):
     return tok
 
 
-def _strip_comment(s: str) -> str:
-    """Drop a ' #' comment outside quotes."""
-    in_s = in_d = False
-    for i, ch in enumerate(s):
-        if ch == "'" and not in_d:
-            in_s = not in_s
-        elif ch == '"' and not in_s:
-            in_d = not in_d
-        elif ch == "#" and not in_s and not in_d:
-            if i == 0 or s[i - 1] in " \t":
-                return s[:i].rstrip()
-    return s
-
-
-def _value_token(tok: str, depth: int):
-    tok = tok.strip()
-    if tok.startswith("&") or tok.startswith("*"):
-        raise _limit("anchors/aliases unsupported")
-    if tok.startswith("!"):
-        raise _limit("tags unsupported")
-    if tok.startswith("'"):
-        if len(tok) < 2 or not tok.endswith("'"):
-            raise _err("unterminated single-quoted scalar")
-        return tok[1:-1].replace("''", "'")
-    if tok.startswith('"'):
-        if len(tok) < 2 or not tok.endswith('"'):
-            raise _err("unterminated double-quoted scalar")
-        try:
-            return json.loads(tok)
-        except json.JSONDecodeError:
-            raise _err("bad escapes in double-quoted scalar") from None
-    if tok.startswith("["):
-        return _flow_seq(tok, depth)
-    if tok.startswith("{"):
-        return _flow_map(tok, depth)
-    return _scalar(tok)
-
-
-def _split_flow(body: str) -> list:
-    """Split a flow body on top-level commas (quotes + nesting aware)."""
-    parts, buf, level = [], [], 0
-    in_s = in_d = False
-    for ch in body:
-        if ch == "'" and not in_d:
-            in_s = not in_s
-        elif ch == '"' and not in_s:
-            in_d = not in_d
-        elif not in_s and not in_d:
-            if ch in "[{":
-                level += 1
-            elif ch in "]}":
-                level -= 1
-            elif ch == "," and level == 0:
-                parts.append("".join(buf))
-                buf = []
-                continue
-        buf.append(ch)
-    if in_s or in_d or level:
-        raise _err("unterminated flow collection or quote")
-    parts.append("".join(buf))
-    return parts
-
-
-def _flow_seq(tok: str, depth: int):
-    if depth > 16:
-        raise _err("flow nesting deeper than 16")
-    if not tok.endswith("]"):
-        raise _err("unterminated flow sequence")
-    body = tok[1:-1].strip()
-    if not body:
-        return []
-    return [_value_token(p, depth + 1) for p in _split_flow(body)]
-
-
-def _flow_map(tok: str, depth: int):
-    if depth > 16:
-        raise _err("flow nesting deeper than 16")
-    if not tok.endswith("}"):
-        raise _err("unterminated flow mapping")
-    body = tok[1:-1].strip()
-    if not body:
-        return {}
-    out = {}
-    for part in _split_flow(body):
-        if ":" not in part:
-            raise _err("flow mapping entry without ':'")
-        k, v = part.split(":", 1)
-        out[str(_value_token(k, depth + 1))] = _value_token(v, depth + 1)
-    return out
-
-
-def _key_token(tok: str):
-    tok = tok.strip()
-    if tok == "<<":
-        raise _limit("merge keys unsupported")
-    if tok.startswith("?") or tok.startswith("[") or tok.startswith("{"):
-        raise _limit("complex mapping keys unsupported")
-    v = _value_token(tok, 0)
-    if isinstance(v, (dict, list)):
-        raise _limit("complex mapping keys unsupported")
-    return str(v) if not isinstance(v, str) else v
-
-
-def _split_key(line: str):
-    """key: rest — the first ':' followed by space/EOL, outside
-    quotes/flow. Returns (key, rest) or None."""
-    in_s = in_d = False
-    level = 0
-    for i, ch in enumerate(line):
-        if ch == "'" and not in_d:
-            in_s = not in_s
-        elif ch == '"' and not in_s:
-            in_d = not in_d
-        elif not in_s and not in_d:
-            if ch in "[{":
-                level += 1
-            elif ch in "]}":
-                level -= 1
-            elif ch == ":" and level == 0:
-                if i + 1 == len(line) or line[i + 1] in " \t":
-                    return line[:i], line[i + 1 :].strip()
-    return None
-
-
-class _Lines:
-    def __init__(self, lines):
-        self.lines = lines
-        self.pos = 0
-
-    def peek(self):
-        while self.pos < len(self.lines):
-            raw = self.lines[self.pos]
-            body = _strip_comment(raw)
-            if body.strip() == "":
-                self.pos += 1
-                continue
-            if body.lstrip(" ").startswith("\t") or raw.startswith("\t"):
-                raise _limit("tab indentation unsupported")
-            return body
-        return None
-
-    def take(self):
-        line = self.peek()
-        if line is not None:
-            self.pos += 1
-        return line
-
-
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" "))
-
-
-def _block_scalar(ls: _Lines, header: str, parent_indent: int) -> str:
-    folded = header[0] == ">"
-    chomp = header[1:2]
-    body = []
-    base = None
-    while True:
-        if ls.pos >= len(ls.lines):
-            break
-        raw = ls.lines[ls.pos]
-        if raw.strip() == "":
-            body.append("")
-            ls.pos += 1
-            continue
-        ind = _indent(raw)
-        if ind <= parent_indent:
-            break
-        if base is None:
-            base = ind
-        if ind < base:
-            break
-        body.append(raw[base:])
-        ls.pos += 1
-    while body and body[-1] == "":
-        body.pop()
-    if folded:
-        out = []
-        for i, seg in enumerate(body):
-            if seg == "":
-                out.append("\n")
-            elif out and not out[-1].endswith("\n"):
-                out.append(" " + seg)
-            else:
-                out.append(seg)
-        text = "".join(out)
-    else:
-        text = "\n".join(body)
-    if chomp != "-":
-        text += "\n"
-    return text
-
-
-def _parse_block(ls: _Lines, indent: int, depth: int, budget: list):
-    if depth > 32:
-        raise _err("block nesting deeper than 32")
-    line = ls.peek()
-    if line is None:
-        return None
-    ind = _indent(line)
-    if ind < indent:
-        return None
-    stripped = line.strip()
-    if stripped.startswith("- "):
-        return _parse_seq(ls, ind, depth, budget)
-    if stripped == "-":
-        return _parse_seq(ls, ind, depth, budget)
-    return _parse_map(ls, ind, depth, budget)
-
-
-def _parse_seq(ls: _Lines, indent: int, depth: int, budget: list):
-    out = []
-    while True:
-        line = ls.peek()
-        if line is None or _indent(line) != indent:
-            break
-        stripped = line.strip()
-        if not (stripped == "-" or stripped.startswith("- ")):
-            break
-        budget[0] -= 1
-        if budget[0] <= 0:
-            raise _err("element budget exceeded")
-        ls.take()
-        rest = stripped[1:].strip()
-        if rest == "":
-            child = _parse_block(ls, indent + 1, depth + 1, budget)
-            out.append(child)
-        elif rest[0] in ("|", ">"):
-            out.append(_block_scalar(ls, rest, indent))
-        elif _split_key(rest) is not None:
-            # inline first mapping entry of a sequence item
-            k, v = _split_key(rest)
-            item = _inline_map_entry(
-                ls, k, v, indent + 2, depth + 1, budget
-            )
-            out.append(item)
-        else:
-            out.append(_value_token(rest, depth))
-    return out
-
-
-def _inline_map_entry(ls, k, v, cont_indent, depth, budget):
-    item = {}
-    key = _key_token(k)
-    if v == "":
-        item[key] = _parse_block(ls, cont_indent, depth + 1, budget)
-    elif v and v[0] in ("|", ">"):
-        item[key] = _block_scalar(ls, v, cont_indent - 1)
-    else:
-        item[key] = _value_token(v, depth)
-    # further sibling keys of the same mapping at cont_indent
-    while True:
-        line = ls.peek()
-        if line is None or _indent(line) != cont_indent:
-            break
-        if line.strip().startswith("- "):
-            break
-        kv = _split_key(line.strip())
-        if kv is None:
-            break
-        ls.take()
-        k2, v2 = kv
-        key2 = _key_token(k2)
-        if key2 in item:
-            raise _err(f"duplicate mapping key {key2!r}")
-        budget[0] -= 1
-        if budget[0] <= 0:
-            raise _err("element budget exceeded")
-        if v2 == "":
-            item[key2] = _parse_block(
-                ls, cont_indent + 1, depth + 1, budget
-            )
-        elif v2 and v2[0] in ("|", ">"):
-            item[key2] = _block_scalar(ls, v2, cont_indent)
-        else:
-            item[key2] = _value_token(v2, depth)
-    return item
-
-
-def _parse_map(ls: _Lines, indent: int, depth: int, budget: list):
-    out = {}
-    while True:
-        line = ls.peek()
-        if line is None or _indent(line) != indent:
-            break
-        stripped = line.strip()
-        if stripped.startswith("- ") or stripped == "-":
-            break
-        kv = _split_key(stripped)
-        if kv is None:
-            raise _err(f"line is neither a mapping entry nor a "
-                       f"sequence item: {stripped[:40]!r}")
-        ls.take()
-        k, v = kv
-        key = _key_token(k)
-        if key in out:
-            raise _err(f"duplicate mapping key {key!r}")
-        budget[0] -= 1
-        if budget[0] <= 0:
-            raise _err("element budget exceeded")
-        if v == "":
-            child = _parse_block(ls, indent + 1, depth + 1, budget)
-            out[key] = child
-        elif v[0] in ("|", ">"):
-            out[key] = _block_scalar(ls, v, indent)
-        else:
-            out[key] = _value_token(v, depth)
-    return out
-
-
 def yaml_parse(text: str, max_elements: int = 100_000):
     """One YAML document -> Python value (the safe subset)."""
     if "\t" in text:
         raise _limit("tab characters unsupported")
-    lines = text.split("\n")
-    # document markers: a leading '---' is fine; a SECOND one means
-    # multi-doc, which is a capability limit
-    body = []
-    seen_start = False
-    for ln in lines:
-        s = _strip_comment(ln).strip()
-        if s == "---":
-            if seen_start or body and any(x.strip() for x in body):
-                raise _limit("multi-document streams unsupported")
-            seen_start = True
-            continue
-        if s == "...":
-            break
-        body.append(ln)
-    ls = _Lines(body)
-    budget = [max_elements]
-    first = ls.peek()
-    if first is None:
-        return None
-    if _indent(first) != 0:
-        raise _err("top-level content must start at column 0")
-    stripped = first.strip()
-    if (
-        _split_key(stripped) is None
-        and not stripped.startswith("- ")
-        and stripped != "-"
-    ):
-        # single top-level scalar document
-        ls.take()
-        if stripped[0] in ("|", ">"):
-            return _block_scalar(ls, stripped, -1)
-        return _value_token(stripped, 0)
-    val = _parse_block(ls, 0, 0, budget)
-    leftover = ls.peek()
-    if leftover is not None:
-        raise _err(
-            f"content after the top-level block: {leftover.strip()[:40]!r}"
-        )
-    return val
+    root = None
+    stack = []  # open collections: [container, pending key]
+    budget = max_elements
+    docs = 0
+    try:
+        for ev in yaml.parse(text, Loader=yaml.CSafeLoader):
+            kind = type(ev)
+            if kind is yaml.ScalarEvent:
+                plain = not ev.style
+                value = _scalar(ev.value) if plain else ev.value
+            elif kind is yaml.MappingStartEvent:
+                value = {}
+            elif kind is yaml.SequenceStartEvent:
+                value = []
+            elif kind in (yaml.MappingEndEvent, yaml.SequenceEndEvent):
+                stack.pop()
+                continue
+            elif kind is yaml.AliasEvent:
+                raise _limit("anchors/aliases unsupported")
+            else:
+                if kind is yaml.DocumentStartEvent:
+                    docs += 1
+                    if docs > 1:
+                        raise _limit("multi-document streams unsupported")
+                continue
+            if ev.anchor is not None:
+                raise _limit("anchors/aliases unsupported")
+            if ev.tag is not None:
+                raise _limit("tags unsupported")
+            if stack:
+                frame = stack[-1]
+                into = frame[0]
+                if type(into) is dict and frame[1] is _NO_KEY:
+                    if kind is not yaml.ScalarEvent:
+                        raise _limit("complex mapping keys unsupported")
+                    if plain and ev.value == "<<":
+                        raise _limit("merge keys unsupported")
+                    key = str(value)
+                    if key in into:
+                        raise _err(f"duplicate mapping key {key!r}")
+                    frame[1] = key
+                    continue
+                budget -= 1
+                if budget <= 0:
+                    raise _err("element budget exceeded")
+                if type(into) is list:
+                    into.append(value)
+                else:
+                    into[frame[1]] = value
+                    frame[1] = _NO_KEY
+            else:
+                root = value
+            if kind is not yaml.ScalarEvent:
+                if len(stack) == _MAX_DEPTH:
+                    raise _err(f"nesting deeper than {_MAX_DEPTH}")
+                stack.append([value, _NO_KEY])
+    except yaml.YAMLError as exc:
+        raise _err(" ".join(str(exc).split())) from None
+    return root
 
 
 def yaml_records(
@@ -421,31 +135,10 @@ def yaml_records(
     on_unsupported: str = "error",
 ) -> DataFrame:
     """(id, yaml text) -> (file_id, record_json) compact JSON."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "record_json": []}
-            for fid, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                try:
-                    val = yaml_parse(text, max_elements)
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                out["file_id"].append(fid)
-                out["record_json"].append(
-                    json.dumps(
-                        val, separators=(",", ":"), ensure_ascii=False
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, YAML_RECORDS_SCHEMA)
+    return records_stage(
+        files,
+        lambda text: yaml_parse(text, max_elements),
+        text_col,
+        id_col,
+        on_unsupported,
+    )

@@ -34,3 +34,15 @@ def test_spark_surface(spark):
     ).collect()
     assert len(rows) == 1
     assert json.loads(rows[0]["record_json"])["data"] == "AP8="
+
+
+def test_spark_surface_limit_policy(spark):
+    files = spark.createDataFrame(
+        [(1, plistlib.dumps(D, fmt=plistlib.FMT_XML)),
+         (2, b"\x89PNG\r\n\x1a\n")],
+        "file_id long, payload binary",
+    )
+    rows = plist_records(files, on_unsupported="null").collect()
+    assert [r["file_id"] for r in rows] == [1]
+    with pytest.raises(Exception, match="file_id=2: payload is neither"):
+        plist_records(files).collect()

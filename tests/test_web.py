@@ -825,6 +825,10 @@ def test_mislabel_sniff_rules(spark):
          "text/html; charset=windows-1251"),
         # NEGATIVE: a stray ESC that is not valid ISO-2022 -> no sniff
         (8, b"x \x1b$B\xff\xff broken", None),
+        # NEGATIVE: header utf-16-be whose surrogate pair D8 9B DE 80
+        # also strict-decodes as utf-8 keeps the declaration
+        (9, "\U00036e80".encode("utf-16-be"),
+         "text/plain; charset=utf-16-be"),
     ]
     df = spark.createDataFrame(
         rows, "doc_id long, body binary, content_type string"
@@ -845,6 +849,8 @@ def test_mislabel_sniff_rules(spark):
     assert out[6]["charset"] == "windows-1252"
     assert out[7]["charset_source"] == "header"
     assert out[8]["charset_source"] == "fallback"
+    assert (out[9]["text"], out[9]["charset_source"]) \
+        == ("\U00036e80", "header")
     assert all(out[i]["n_replacements"] == 0 for i in (1, 2, 3, 4, 5, 6, 7))
 
 

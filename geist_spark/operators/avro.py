@@ -14,13 +14,13 @@ stream walk).
 Decoded datums surface as deterministic JSON strings (compact
 separators, schema field order, bytes/fixed as base64, unions
 unwrapped) so the operator stays schema-agnostic — downstream
-`from_json` applies typing per pipeline. Two-tier errors: ValueError
-= malformed container/datum (bad magic, sync mismatch, varint
-overrun, snappy CRC mismatch), NotImplementedError = declared
-capability limit (unknown codec). All decompression BOUNDED by
-max_bytes.
+`from_json` applies typing per pipeline. Two-tier errors
+(operators/records.py): a malformed container or datum (bad magic,
+sync mismatch, varint overrun, snappy CRC mismatch) always raises;
+an unknown codec is the capability limit. All decompression BOUNDED
+by max_bytes.
 
-Scale: one Arrow-batched mapInPandas stage over (file_id, payload),
+Scale: the decoder family's one Arrow stage over (file_id, payload),
 row fan-out inside the batch — the warc_parse shape; at 100 TB the
 file listing is the input table and block decode parallelizes per
 file.
@@ -42,6 +42,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from geist_spark.operators import lzcodecs
+from geist_spark.operators.records import payload_stage, to_json
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -296,38 +297,14 @@ def avro_records(
     """Avro container -> one row per datum: (file_id, row_idx 0-based,
     record_json). JSON dialect: compact separators, schema field
     order, bytes/fixed base64, unions unwrapped, non-ASCII kept raw."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            out = {"file_id": [], "row_idx": [], "record_json": []}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    for i, rec in enumerate(
-                        _records_of(bytes(payload), max_bytes)
-                    ):
-                        out["file_id"].append(fid)
-                        out["row_idx"].append(i)
-                        out["record_json"].append(
-                            json.dumps(
-                                rec,
-                                separators=(",", ":"),
-                                ensure_ascii=False,
-                            )
-                        )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, AVRO_RECORDS_SCHEMA)
+    return payload_stage(
+        files,
+        lambda b: [
+            (i, to_json(r)) for i, r in enumerate(_records_of(b, max_bytes))
+        ],
+        AVRO_RECORDS_SCHEMA, on_unsupported, in_col=payload_col,
+        id_col=id_col, null_row=False,
+    )
 
 
 def avro_info(
@@ -338,37 +315,15 @@ def avro_info(
     on_unsupported: str = "error",
 ) -> DataFrame:
     """Container-grain census: schema JSON, codec, block/row counts."""
-    import pandas as pd
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    def decode(b: bytes) -> list:
+        schema_json, codec, blocks = _container(b, max_bytes)
+        return [(schema_json, codec, len(blocks), sum(n for n, _ in blocks))]
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "file_id", "schema_json", "codec", "n_blocks", "n_rows"
-            )}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    schema_json, codec, blocks = _container(
-                        bytes(payload), max_bytes
-                    )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                out["file_id"].append(fid)
-                out["schema_json"].append(schema_json)
-                out["codec"].append(codec)
-                out["n_blocks"].append(len(blocks))
-                out["n_rows"].append(sum(n for n, _ in blocks))
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(run, AVRO_INFO_SCHEMA)
+    return payload_stage(
+        files, decode, AVRO_INFO_SCHEMA, on_unsupported, in_col=payload_col,
+        id_col=id_col, null_row=False,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,13 +15,14 @@ leaf in walk order; a missing Date (or one that does not parse) is
 NULL, not an error (real archives are full of them); messages with no
 text/plain leaf surface body NULL.
 
-Two-tier errors: payloads that do not start with a header line or an
-mbox 'From ' separator are a CAPABILITY limit; the stdlib parser is
-lenient by design, so the malformed tier only covers structural
-impossibilities (empty payload, mbox with zero messages).
+Two-tier errors (operators/records.py): payloads that do not start
+with a header line or an mbox 'From ' separator are a capability
+limit; the stdlib parser is lenient by design, so the malformed tier
+only covers structural impossibilities (empty payload, mbox with zero
+messages).
 
-One Arrow mapInPandas stage, message fan-out inside the batch (the
-warc_parse shape). Reference parity: n/a (geist is JSON-only).
+The decoder family's one Arrow stage, message fan-out inside the
+batch (the warc_parse shape). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
@@ -32,6 +33,9 @@ import email.utils
 import re
 
 from pyspark.sql import DataFrame
+
+from geist_spark.operators.bucketing import fan_out
+from geist_spark.operators.records import payload_stage
 
 EMAIL_SCHEMA = (
     "file_id long, msg_idx int, from_addr string, to_addrs string, "
@@ -120,52 +124,32 @@ def email_parse(
 ) -> DataFrame:
     """Email payloads -> one row per message. mbox: 'auto' (sniff the
     'From ' separator), 'always', 'never'."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
     if mbox not in ("auto", "always", "never"):
         raise ValueError("mbox must be auto/always/never")
-    cols = [c.strip().split(" ")[0] for c in EMAIL_SCHEMA.split(",")]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                is_mbox = (
-                    mbox == "always"
-                    or (mbox == "auto" and b.startswith(b"From "))
-                )
-                if not is_mbox and not _HDR_RE.match(b):
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: payload is neither an "
-                            "RFC 5322 message nor an mbox"
-                        )
-                    continue
-                if is_mbox:
-                    msgs = _split_mbox(b)
-                    if not msgs:
-                        raise ValueError(
-                            f"malformed mbox ({id_col}={fid}): 'From ' "
-                            "separator with no messages"
-                        )
-                else:
-                    msgs = [b]
-                for i, raw in enumerate(msgs):
-                    info = _parse_one(raw)
-                    rows["file_id"].append(fid)
-                    rows["msg_idx"].append(i)
-                    for k, v in info.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def decode(b: bytes, fid) -> list:
+        is_mbox = mbox == "always" or (
+            mbox == "auto" and b.startswith(b"From ")
+        )
+        if not is_mbox and not _HDR_RE.match(b):
+            raise NotImplementedError(
+                "payload is neither an RFC 5322 message nor an mbox"
+            )
+        msgs = _split_mbox(b) if is_mbox else [b]
+        if not msgs:
+            raise ValueError(
+                f"malformed mbox ({id_col}={fid}): 'From ' "
+                "separator with no messages"
+            )
+        return [(i, *_parse_one(raw).values()) for i, raw in enumerate(msgs)]
 
     # policy.default parsing costs ~2.5 ms per message: widen a
     # single-split input before the Arrow stage or every message in a
-    # small file parses on one core (no-op on healthy wide scans)
-    from geist_spark.operators.bucketing import fan_out
-
-    return fan_out(files).mapInPandas(run, EMAIL_SCHEMA)
+    # small file parses on one core (no-op on healthy wide scans).
+    # The id rides along as decode's second argument for the malformed
+    # mbox message.
+    return payload_stage(
+        fan_out(files), decode, EMAIL_SCHEMA, on_unsupported,
+        in_col=payload_col, id_col=id_col, null_row=False,
+        extra_cols=(id_col,),
+    )

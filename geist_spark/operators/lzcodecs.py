@@ -21,7 +21,7 @@ the Avro block codecs:
   frames, a declared capability limit (crawl archives are
   self-contained frames). libzstd reports a dictionary frame as
   "Dictionary mismatch"; liblz4 would silently return nothing for
-  one, so the FLG DictID bit is checked here.
+  one, so every LZ4 frame's FLG DictID bit is checked here.
 - Multi-frame concatenation, skippable frames and the zstd/LZ4
   checksums are the libraries' own behaviour.
 
@@ -136,12 +136,41 @@ def zstd_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
     return _read_frames(b, "zstd", max_bytes)
 
 
+def _lz4_check_dict_ids(b: bytes, pos: int) -> None:
+    """Raise the dictionary limit if any frame from `pos` on sets the
+    FLG DictID bit. Walks frame descriptors, skipping blocks by their
+    size words and checksum flags and skippable frames by their size;
+    it stops quietly at anything else (truncation, foreign bytes),
+    which liblz4 then reports as malformed."""
+    n = len(b)
+    while n - pos >= 6:
+        if _is_skippable(b, pos):
+            pos += 8 + struct.unpack_from("<I", b, pos + 4)[0]
+            continue
+        if struct.unpack_from("<I", b, pos)[0] != LZ4_MAGIC:
+            return
+        flg = b[pos + 4]
+        if flg & 0x01:
+            raise _dictionary_limit("lz4", "FLG DictID set")
+        # magic, FLG, BD, optional 8-byte content size, HC
+        pos += 7 + (8 if flg & 0x08 else 0)
+        block_crc = 4 if flg & 0x10 else 0
+        while True:
+            if n - pos < 4:
+                return
+            size = struct.unpack_from("<I", b, pos)[0]
+            pos += 4
+            if not size:  # EndMark
+                break
+            pos += (size & 0x7FFFFFFF) + block_crc
+        pos += 4 if flg & 0x04 else 0  # content checksum
+
+
 def lz4_decompress(b: bytes, max_bytes: int = 64 * 1024 * 1024) -> bytes:
     """Decode an LZ4 frame payload (linked or independent blocks,
     frame concatenation, skippable frames, block/content checksums
     verified)."""
-    if b[_first_frame(b, "lz4", LZ4_MAGIC)] & 0x01:
-        raise _dictionary_limit("lz4", "FLG DictID set")
+    _lz4_check_dict_ids(b, _first_frame(b, "lz4", LZ4_MAGIC) - 4)
     return _read_frames(b, "lz4", max_bytes)
 
 

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from geist_spark.operators.jpeg import jpeg_decode
+from geist_spark.operators.records import check_policy, payload_stage
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -259,88 +260,44 @@ def frame_sample_real(
     runs inside the same Arrow-batched mapInPandas stage — no shuffle,
     no per-row Python boundary.
 
-    Same two-tier error contract as the other decoders: capability
-    limits (not an AVI; codecs other than raw-DIB/MJPEG) raise naming
-    the media_id or NULL out (one NULL row, frame_idx NULL) with
-    on_unsupported='null'; malformed payloads of a supported format
-    (truncated chunks/frames, zero frame period, a non-JPEG MJPEG
-    frame) always raise."""
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    Two-tier errors (operators/records.py; 1:1 NULL shape: one row,
+    frame_idx NULL): not an AVI and codecs other than raw-DIB/MJPEG
+    are capability limits; truncated chunks/frames, a zero frame
+    period and a non-JPEG MJPEG frame are malformed."""
     if every_ms <= 0:
         raise ValueError("every_ms must be positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in FRAME_SCHEMA.fields}
+    def decode(b: bytes) -> list:
+        if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+            raise NotImplementedError(
+                "payload is not a raw-DIB or MJPEG AVI; other "
+                "video containers/codecs need ffmpeg, not "
+                "present in this environment — pass "
+                "on_unsupported='null' to skip"
+            )
+        usec, w, h, top_down, codec, frames = _avi_decode(b)
+        if not frames:
+            # decodable but frameless: keep one row per media (dims
+            # carried, frame_idx NULL) so the id never silently
+            # vanishes from per-media accounting
+            return [(None, None, w, h, None, None)]
+        rows = []
+        # skipped frames are never decoded; a mid-stream capability
+        # limit (a progressive-JPEG MJPEG frame) raises out of the
+        # list, so the media collapses to one NULL row under 'null'
+        for idx in range(0, len(frames), max(1, every_ms * 1000 // usec)):
+            if codec == "mjpg":
+                _fmt, fw, fh, _ch, rgb = jpeg_decode(frames[idx])
+            else:
+                fw, fh = w, h
+                rgb = _dib_to_rgb(frames[idx], 0, w, h, top_down)
+            rows.append((
+                idx, idx * usec // 1000, fw, fh,
+                _luma_fx(rgb), hashlib.md5(rgb).hexdigest(),
+            ))
+        return rows
 
-            def emit(mid, idx, ts, w, h, luma, md5):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(idx)
-                out["ts_ms"].append(ts)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_luma_fx"].append(luma)
-                out["pixel_md5"].append(md5)
-
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    emit(mid, None, None, None, None, None, None)
-                    continue
-                b = bytes(payload)
-                try:
-                    if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                        usec, w, h, top_down, codec, frames = _avi_decode(b)
-                    else:
-                        raise NotImplementedError(
-                            "payload is not a raw-DIB or MJPEG AVI; other "
-                            "video containers/codecs need ffmpeg, not "
-                            "present in this environment — pass "
-                            "on_unsupported='null' to skip"
-                        )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"media_id={mid}: {exc}"
-                        ) from exc
-                    emit(mid, None, None, None, None, None, None)
-                    continue
-                if not frames:
-                    # decodable but frameless: keep one row per media
-                    # (dims carried, frame_idx NULL) so the id never
-                    # silently vanishes from per-media accounting
-                    emit(mid, None, None, w, h, None, None)
-                    continue
-                stride = max(1, every_ms * 1000 // usec)
-                # buffer the media's rows: a mid-stream CAPABILITY
-                # limit (e.g. a progressive-JPEG MJPEG frame) must
-                # collapse to ONE NULL row under 'null', not leave a
-                # partial frame fan-out behind
-                rows: list[tuple] = []
-                try:
-                    for idx, raw in enumerate(frames):
-                        if idx % stride:
-                            continue  # skipped frames are never decoded
-                        if codec == "mjpg":
-                            _fmt, fw, fh, _ch, rgb = jpeg_decode(raw)
-                        else:
-                            fw, fh = w, h
-                            rgb = _dib_to_rgb(raw, 0, w, h, top_down)
-                        rows.append((
-                            mid, idx, idx * usec // 1000, fw, fh,
-                            _luma_fx(rgb), hashlib.md5(rgb).hexdigest(),
-                        ))
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"media_id={mid}: {exc}"
-                        ) from exc
-                    rows = [(mid, None, None, None, None, None, None)]
-                for row in rows:
-                    emit(*row)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
+    return payload_stage(media, decode, FRAME_SCHEMA, on_unsupported)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -1380,46 +1337,22 @@ def resize_real(
     pixel_md5) for the RESIZED image: width/height are the TARGET
     dims, channels the SOURCE channel count (1 for grayscale —
     matching decode_real's meaning of the column), luma/hash over the
-    resized normalized-RGB bytes. Same Arrow-batched mapInPandas
-    stage and two-tier error contract as decode_real; resize_stub
+    resized normalized-RGB bytes. Same payload stage and capability
+    limits as decode_real (operators/records.py); resize_stub
     remains the plumbing twin for undecodable payloads."""
     if width <= 0 or height <= 0:
         raise ValueError("width and height must be positive")
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in DECODED_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt = ch = luma = md5 = None
-                w_out = h_out = None
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        fmt, w, h, ch, rgb = _decode_rgb_bytes(
-                            b, "resize_stub (deterministic plumbing twin)"
-                        )
-                        r = _nn_resize_rgb(rgb, w, h, width, height)
-                        w_out, h_out = width, height
-                        luma = _luma_fx(r)
-                        md5 = hashlib.md5(r).hexdigest()
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        fmt = ch = luma = md5 = w_out = h_out = None
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["width"].append(w_out)
-                out["height"].append(h_out)
-                out["channels"].append(ch)
-                out["mean_luma_fx"].append(luma)
-                out["pixel_md5"].append(md5)
-            yield pd.DataFrame(out)
+    def decode(b: bytes) -> list:
+        fmt, w, h, ch, rgb = _decode_rgb_bytes(
+            b, "resize_stub (deterministic plumbing twin)"
+        )
+        r = _nn_resize_rgb(rgb, w, h, width, height)
+        return [
+            (fmt, width, height, ch, _luma_fx(r), hashlib.md5(r).hexdigest())
+        ]
 
-    return media.mapInPandas(run, DECODED_SCHEMA)
+    return payload_stage(media, decode, DECODED_SCHEMA, on_unsupported)
 
 
 def decode_real(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
@@ -1434,47 +1367,22 @@ def decode_real(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     normalization is numpy-vectorized (SCALE.md "Decoder
     vectorization").
 
-    CAPABILITY limits vs MALFORMED data are distinct contracts:
-    unsupported formats or variants (JPEG/WebP, compressed/non-24-bit
-    BMP, 16-bit PPM, interlaced/alpha/16-bit PNG — NotImplementedError
-    inside the decoders) raise
-    by default naming the first offending media_id, or NULL out with
-    on_unsupported="null" so mixed corpora decode what's decodable in
-    one pass. MALFORMED payloads of a supported format (truncation,
-    non-positive dimensions, pixel offset inside the header) always
-    raise ValueError regardless of the option — silent partial
-    decodes are the wrong default for a data pipeline."""
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    Two-tier errors (operators/records.py): formats and variants
+    outside _decode_rgb_bytes's set are capability limits, so
+    on_unsupported="null" decodes what's decodable in a mixed corpus in
+    one pass; truncation, non-positive dimensions and a pixel offset
+    inside the header are malformed — silent partial decodes are the
+    wrong default for a data pipeline."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in DECODED_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt = w = h = ch = luma = md5 = None
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        fmt, w, h, ch, rgb = _decode_rgb_bytes(
-                            b, "extract_media_features (deterministic stub)"
-                        )
-                        luma, md5 = _luma_fx(rgb), hashlib.md5(rgb).hexdigest()
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        fmt = w = h = ch = luma = md5 = None
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["mean_luma_fx"].append(luma)
-                out["pixel_md5"].append(md5)
-            yield pd.DataFrame(out)
+    def decode(b: bytes) -> list:
+        fmt, w, h, ch, rgb = _decode_rgb_bytes(
+            b, "extract_media_features (deterministic stub)"
+        )
+        return [
+            (fmt, w, h, ch, _luma_fx(rgb), hashlib.md5(rgb).hexdigest())
+        ]
 
-    return media.mapInPandas(run, DECODED_SCHEMA)
+    return payload_stage(media, decode, DECODED_SCHEMA, on_unsupported)
 
 
 AUDIO_SCHEMA = T.StructType(
@@ -1664,51 +1572,22 @@ def exif_extract(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     camera make/model, capture datetime, and whether a GPS IFD is
     present (privacy flag — pair with strip_metadata). JPEG-only by
     nature (the other supported formats carry no EXIF): non-JPEG
-    payloads are a CAPABILITY limit (NULL row under
-    on_unsupported='null'); a JPEG without an Exif APP1 is a normal
-    row (format='JPEG', NULL fields, has_gps=false); malformed
-    JPEG/Exif structure always raises ValueError.
+    payloads are a capability limit (operators/records.py's two-tier
+    contract, 1:1 NULL shape); a JPEG without an Exif APP1 is a
+    normal row (format='JPEG', NULL fields, has_gps=false); damaged
+    JPEG/Exif structure is malformed.
 
-    Arrow-batched mapInPandas, zero shuffle — the marker walk stops
+    One Arrow stage, zero shuffle — the marker walk stops
     at SOS, so cost is per-image METADATA bytes, not payload size."""
-    import pandas as pd
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    def decode(b: bytes) -> list:
+        info = _exif_parse(b)
+        if info is None:
+            return [("JPEG", None, None, None, None, False)]
+        return [("JPEG", info["orientation"], info["make"], info["model"],
+                 info["datetime"], info["has_gps"])]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "format", "orientation", "make", "model",
-                "datetime", "has_gps",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt = ori = mk = md = dt = gps = None
-                if payload is not None:
-                    try:
-                        info = _exif_parse(bytes(payload))
-                        fmt = "JPEG"
-                        gps = False
-                        if info is not None:
-                            ori = info["orientation"]
-                            mk, md = info["make"], info["model"]
-                            dt = info["datetime"]
-                            gps = info["has_gps"]
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                rows["media_id"].append(mid)
-                rows["format"].append(fmt)
-                rows["orientation"].append(ori)
-                rows["make"].append(mk)
-                rows["model"].append(md)
-                rows["datetime"].append(dt)
-                rows["has_gps"].append(gps)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, EXIF_SCHEMA)
+    return payload_stage(media, decode, EXIF_SCHEMA, on_unsupported)
 
 
 def strip_metadata(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
@@ -1723,59 +1602,38 @@ def strip_metadata(media: DataFrame, on_unsupported: str = "error") -> DataFrame
     (leading ID3v2 tag + trailing ID3v1 block cut; MPEG frames
     verbatim), and FLAC (VORBIS_COMMENT/PICTURE/PADDING blocks
     dropped, last-block flag re-pinned, frames verbatim).
-    on_unsupported:
-    'error' (raise on other formats), 'null' (NULL payload), or
+    on_unsupported: 'error' and 'null' as in operators/records.py's
+    two-tier contract (other formats are the capability limit), or
     'keep' (pass other formats through unchanged — the right mode
     for mixed corpora: PPM here carries no metadata segments).
     Malformed JPEG/WAV/PNG structure always raises.
 
     Map-only Arrow stage; output schema keeps orig/stripped lengths
     so the scrub is auditable without re-reading payloads."""
-    import pandas as pd
+    check_policy(on_unsupported, ("error", "null", "keep"))
+    keep = on_unsupported == "keep"
 
-    if on_unsupported not in ("error", "null", "keep"):
-        raise ValueError(
-            "on_unsupported must be 'error', 'null' or 'keep'"
-        )
+    def decode(b: bytes) -> list:
+        try:
+            if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+                out = _wav_strip_metadata(b)
+            elif b[:8] == _PNG_SIG:
+                out = _png_strip_metadata(b)
+            elif b[:3] == b"ID3":
+                out = _mp3_strip_metadata(b)
+            elif b[:4] == b"fLaC":
+                out = _flac_strip_metadata(b)
+            else:
+                out = _jpeg_strip_metadata(b)
+        except NotImplementedError:
+            if not keep:
+                raise
+            out = b  # 'keep': other formats pass through unchanged
+        return [(out, len(b), len(out))]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "payload", "orig_len", "stripped_len",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                out = olen = slen = None
-                if payload is not None:
-                    b = bytes(payload)
-                    olen = len(b)
-                    try:
-                        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                            out = _wav_strip_metadata(b)
-                        elif b[:8] == _PNG_SIG:
-                            out = _png_strip_metadata(b)
-                        elif b[:3] == b"ID3":
-                            out = _mp3_strip_metadata(b)
-                        elif b[:4] == b"fLaC":
-                            out = _flac_strip_metadata(b)
-                        else:
-                            out = _jpeg_strip_metadata(b)
-                        slen = len(out)
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        if on_unsupported == "keep":
-                            out, slen = b, olen
-                        else:
-                            olen = None
-                rows["media_id"].append(mid)
-                rows["payload"].append(out)
-                rows["orig_len"].append(olen)
-                rows["stripped_len"].append(slen)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, STRIP_SCHEMA)
+    return payload_stage(
+        media, decode, STRIP_SCHEMA, "error" if keep else on_unsupported
+    )
 
 
 def exif_app1(
@@ -1956,12 +1814,7 @@ def mp4_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     Spark-side surface a 100 TB video corpus needs for filtering,
     budgeting and dedup BEFORE any decode. Non-BMFF payloads are a
     capability limit; malformed box trees always raise."""
-    return _run_probe(
-        media, _mp4_parse, MP4_SCHEMA, "MP4",
-        ("major_brand", "duration_ms", "n_tracks", "width", "height",
-         "has_video", "has_audio"),
-        on_unsupported,
-    )
+    return _run_probe(media, _mp4_parse, MP4_SCHEMA, "MP4", on_unsupported)
 
 
 def mp4_build(
@@ -2007,39 +1860,18 @@ def _run_probe(
     parse_fn,
     schema: "T.StructType",
     fmt_name: str,
-    fields: tuple,
     on_unsupported: str,
 ) -> DataFrame:
-    """Shared Arrow-stage runner for the header-probe family
-    (mp4/webp/flac/id3): parse_fn returns a complete field dict or
-    raises the two-tier errors; NULL payloads and (under 'null')
-    capability-limited ones emit all-NULL rows."""
-    import pandas as pd
+    """The header-probe family (mp4/ogg/webp/flac/id3/mkv/RIFF INFO):
+    parse_fn returns a dict holding every schema field after
+    (media_id, format)."""
+    fields = schema.fieldNames()[2:]
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    def decode(b: bytes) -> list:
+        info = parse_fn(b)
+        return [(fmt_name, *(info[k] for k in fields))]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "format", *fields)}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                info = fmt = None
-                if payload is not None:
-                    try:
-                        info = parse_fn(bytes(payload))
-                        fmt = fmt_name
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                rows["media_id"].append(mid)
-                rows["format"].append(fmt)
-                for k in fields:
-                    rows[k].append(info[k] if info else None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema)
+    return payload_stage(media, decode, schema, on_unsupported)
 
 
 OGG_SCHEMA = T.StructType(
@@ -2138,11 +1970,7 @@ def ogg_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     container in the family (WAV/FLAC/MP3 covered): codec, channels,
     rate, duration from BOS ident fields + the final page's granule
     position. Same contract as the other probes."""
-    return _run_probe(
-        media, _ogg_parse, OGG_SCHEMA, "OGG",
-        ("codec", "n_channels", "sample_rate", "duration_ms"),
-        on_unsupported,
-    )
+    return _run_probe(media, _ogg_parse, OGG_SCHEMA, "OGG", on_unsupported)
 
 
 def ogg_build(
@@ -2395,37 +2223,16 @@ def media_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     HEADER bytes only. Downstream routing (decode the images,
     fingerprint the audio, probe-then-skip oversized video) hangs
     off this one map-only pass; at 100 TB it reads metadata bytes,
-    never payload bodies. Unknown magic is a CAPABILITY limit;
-    structurally damaged headers of recognized formats always raise
-    (two-tier contract)."""
-    import pandas as pd
+    never payload bodies. Unknown magic is a capability limit;
+    structurally damaged headers of recognized formats are malformed
+    (operators/records.py's two-tier contract)."""
+    fields = MEDIA_PROBE_SCHEMA.fieldNames()[1:]
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    def decode(b: bytes) -> list:
+        info = _probe_one(b)
+        return [tuple(info[k] for k in fields)]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "format", "kind", "width", "height",
-                "duration_ms", "sample_rate", "n_channels",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                info = None
-                if payload is not None:
-                    try:
-                        info = _probe_one(bytes(payload))
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                rows["media_id"].append(mid)
-                for k in ("format", "kind", "width", "height",
-                          "duration_ms", "sample_rate", "n_channels"):
-                    rows[k].append(info[k] if info else None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, MEDIA_PROBE_SCHEMA)
+    return payload_stage(media, decode, MEDIA_PROBE_SCHEMA, on_unsupported)
 
 
 def audio_envelope_fingerprint(
@@ -2456,49 +2263,22 @@ def audio_envelope_fingerprint(
     Scale shape: map-only fingerprinting (zero shuffle); near-dup
     pairing joins at HASH grain (audio_near_dup_pairs), never
     all-pairs — the d_minhash/dhash shape on the audio axis."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
     if frame < 1 or n_levels < 2 or shingle < 1:
         raise ValueError("frame >= 1, n_levels >= 2, shingle >= 1")
 
-    def run(batches):
-        for pdf in batches:
-            ids, levels = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                lv = None
-                if payload is not None:
-                    try:
-                        _ch, _r, _b, samples = _wav_samples(
-                            bytes(payload)
-                        )
-                        a = np.abs(samples)
-                        nf = a.shape[0] // frame
-                        if nf:
-                            sums = (
-                                a[: nf * frame]
-                                .reshape(nf, frame)
-                                .sum(axis=1)
-                            )
-                            mx = int(sums.max())
-                            lv = (
-                                (sums * n_levels // (mx + 1))
-                                .astype(np.int32)
-                                .tolist()
-                            )
-                        else:
-                            lv = []
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                ids.append(mid)
-                levels.append(lv)
-            yield pd.DataFrame({"media_id": ids, "levels": levels})
+    def decode(b: bytes) -> list:
+        _ch, _r, _b, samples = _wav_samples(b)
+        a = np.abs(samples)
+        nf = a.shape[0] // frame
+        if not nf:
+            return [([],)]
+        sums = a[: nf * frame].reshape(nf, frame).sum(axis=1)
+        mx = int(sums.max())
+        return [((sums * n_levels // (mx + 1)).astype(np.int32).tolist(),)]
 
-    lv = media.mapInPandas(run, "media_id long, levels array<int>")
+    lv = payload_stage(
+        media, decode, "media_id long, levels array<int>", on_unsupported
+    )
     lcol = F.col("levels")
     n_sh = F.size(lcol) - shingle + 1
     shingles = F.transform(
@@ -2662,12 +2442,7 @@ def webp_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     format; its pixel decode needs libwebp — not in this
     environment — but filtering/budgeting only needs this header
     surface). Same contract as mp4_probe."""
-    return _run_probe(
-        media, _webp_parse, WEBP_SCHEMA, "WEBP",
-        ("variant", "width", "height", "has_alpha", "has_animation",
-         "has_exif"),
-        on_unsupported,
-    )
+    return _run_probe(media, _webp_parse, WEBP_SCHEMA, "WEBP", on_unsupported)
 
 
 def webp_build(
@@ -3005,13 +2780,7 @@ def flac_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     duration, Vorbis-comment artist/title, embedded-picture flag —
     the filtering surface; frame decode stays a capability limit.
     Same contract as mp4_probe/webp_probe."""
-    return _run_probe(
-        media, _flac_parse, FLAC_SCHEMA, "FLAC",
-        ("sample_rate", "n_channels", "bits_per_sample",
-         "total_samples", "duration_ms", "artist", "title",
-         "has_picture"),
-        on_unsupported,
-    )
+    return _run_probe(media, _flac_parse, FLAC_SCHEMA, "FLAC", on_unsupported)
 
 
 def flac_build(
@@ -3206,11 +2975,7 @@ def id3_extract(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     themselves remain a codec capability limit; this is the real
     Spark-side filtering surface. Untagged/non-ID3 payloads are a
     capability limit; structural damage always raises."""
-    return _run_probe(
-        media, _id3_parse, ID3_SCHEMA, "MP3",
-        ("version", "title", "artist", "album", "date", "has_image"),
-        on_unsupported,
-    )
+    return _run_probe(media, _id3_parse, ID3_SCHEMA, "MP3", on_unsupported)
 
 
 def id3v2_build(
@@ -3367,40 +3132,14 @@ def riff_info_extract(
 ) -> DataFrame:
     """Audio twin of exif_extract: RIFF LIST/INFO metadata
     (artist/title/date/software) + an id3-chunk presence flag from
-    WAV payloads. Non-RIFF payloads are a CAPABILITY limit (NULL row
-    under on_unsupported='null'); a WAV without INFO is a normal row
-    (format='WAV', NULL fields); truncated chunks always raise.
+    WAV payloads. Non-RIFF payloads are a capability limit
+    (operators/records.py's two-tier contract, 1:1 NULL shape); a WAV
+    without INFO is a normal row (format='WAV', NULL fields);
+    truncated chunks are malformed.
     Map-only Arrow stage, chunk-header walk only."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "format", "artist", "title", "date",
-                "software", "has_id3",
-            )}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt = info = None
-                if payload is not None:
-                    try:
-                        info = _riff_info_parse(bytes(payload))
-                        fmt = "WAV"
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                rows["media_id"].append(mid)
-                rows["format"].append(fmt)
-                for k in ("artist", "title", "date", "software"):
-                    rows[k].append(info[k] if info else None)
-                rows["has_id3"].append(info["has_id3"] if info else None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, RIFF_INFO_SCHEMA)
+    return _run_probe(
+        media, _riff_info_parse, RIFF_INFO_SCHEMA, "WAV", on_unsupported
+    )
 
 
 # IMA/DVI ADPCM tables (IMA ADPCM reference algorithm, also
@@ -3678,82 +3417,40 @@ def decode_audio_real(
     (8-bit unsigned / 16-bit signed LE), parsed in pure Python: chunk
     walk, actual sample values, exact integer loudness (peak and
     floor-mean-square — no sqrt, so the DuckDB oracle replays the
-    numbers bit-for-bit). Same Arrow-batched mapInPandas contract and
-    the same two-tier error contract as decode_real: CAPABILITY
-    limits (not RIFF/WAVE — MP3/AAC/OGG/WebP/AVI — or a non-PCM /
-    non-8/16-bit WAV variant) raise by default naming the media_id or
-    NULL out with on_unsupported='null'; MALFORMED payloads of a
-    supported format (truncated chunks, zero channels, a data chunk
-    that is not a whole number of frames) always raise ValueError."""
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    numbers bit-for-bit). Same payload stage and two-tier error
+    contract as decode_real (operators/records.py): capability
+    limits are not RIFF/WAVE, FLAC or AIFF (MP3/AAC/OGG/WebP/AVI) or
+    an unsupported WAV variant; truncated chunks, zero channels and a
+    data chunk that is not a whole number of frames are malformed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in AUDIO_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                vals = (None,) * 7
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        # RIFF alone is not enough: WebP/AVI are RIFF
-                        # containers too — require the WAVE form type
-                        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                            vals = _wav_decode(b)
-                        elif b[:4] == b"fLaC":
-                            # real FLAC frame decode (operators/flac.py:
-                            # fixed/LPC predictors, Rice residuals, all
-                            # stereo assignments), same exact-int
-                            # reductions as the WAV path
-                            from geist_spark.operators.flac import (
-                                decode_features as _flac_feats,
-                            )
+    def decode(b: bytes) -> list:
+        # RIFF alone is not enough: WebP/AVI are RIFF containers too —
+        # require the WAVE form type
+        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+            vals = _wav_decode(b)
+        elif b[:4] == b"fLaC":
+            # real FLAC frame decode (operators/flac.py: fixed/LPC
+            # predictors, Rice residuals, all stereo assignments), same
+            # exact-int reductions as the WAV path
+            from geist_spark.operators.flac import decode_features
 
-                            vals = _flac_feats(b)
-                        elif b[:4] == b"FORM" and b[8:12] in (
-                            b"AIFF", b"AIFC"
-                        ):
-                            fmt, ch2, rate2, bits2, fr2, smp = (
-                                _aiff_decode_samples(b)
-                            )
-                            peak2 = max(
-                                (abs(s) for s in smp), default=0
-                            )
-                            msq2 = (
-                                sum(s * s for s in smp) // len(smp)
-                                if smp else 0
-                            )
-                            vals = (
-                                fmt, ch2, rate2, bits2, fr2, peak2, msq2
-                            )
-                        else:
-                            raise NotImplementedError(
-                                "payload is not RIFF/WAVE PCM, FLAC or "
-                                "AIFF; lossy audio (MP3/AAC/OGG) needs "
-                                "ffmpeg, not present in this environment "
-                                "— pass on_unsupported='null' to skip"
-                            )
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        vals = (None,) * 7
-                fmt, ch, rate, bits, n_frames, peak, msq = vals
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["n_channels"].append(ch)
-                out["sample_rate"].append(rate)
-                out["bit_depth"].append(bits)
-                out["n_frames"].append(n_frames)
-                out["duration_ms"].append(
-                    n_frames * 1000 // rate if rate else None
-                )
-                out["peak_abs"].append(peak)
-                out["mean_square_fx"].append(msq)
-            yield pd.DataFrame(out)
+            vals = decode_features(b)
+        elif b[:4] == b"FORM" and b[8:12] in (b"AIFF", b"AIFC"):
+            fmt, ch, rate, bits, n_frames, smp = _aiff_decode_samples(b)
+            peak = max((abs(s) for s in smp), default=0)
+            msq = sum(s * s for s in smp) // len(smp) if smp else 0
+            vals = (fmt, ch, rate, bits, n_frames, peak, msq)
+        else:
+            raise NotImplementedError(
+                "payload is not RIFF/WAVE PCM, FLAC or AIFF; lossy audio "
+                "(MP3/AAC/OGG) needs ffmpeg, not present in this "
+                "environment — pass on_unsupported='null' to skip"
+            )
+        fmt, ch, rate, bits, n_frames, peak, msq = vals
+        duration = n_frames * 1000 // rate if rate else None
+        return [(fmt, ch, rate, bits, n_frames, duration, peak, msq)]
 
-    return media.mapInPandas(run, AUDIO_SCHEMA)
+    return payload_stage(media, decode, AUDIO_SCHEMA, on_unsupported)
 
 
 AUDIO_DSP_SCHEMA = T.StructType(
@@ -3836,51 +3533,21 @@ def audio_dsp_features(
     bandwidth / 85%-rolloff / flatness via numpy's real FFT inside
     the same Arrow-batched mapInPandas stage — zero shuffle,
     partition-parallel, the per-clip FFT cost is O(n log n) in the
-    clip length. Same two-tier error contract as decode_audio_real:
-    non-WAV payloads are CAPABILITY limits (raise naming the media_id
-    or NULL under on_unsupported='null'); malformed WAV always raises
+    clip length. Two-tier errors (operators/records.py): non-WAV
+    payloads are capability limits; malformed WAV always raises
     ValueError."""
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in AUDIO_DSP_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                vals = (None,) * 9
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                            vals = _audio_dsp(b)
-                        else:
-                            raise NotImplementedError(
-                                "payload is not RIFF/WAVE PCM; compressed "
-                                "audio (MP3/AAC/OGG) needs ffmpeg, not "
-                                "present in this environment — pass "
-                                "on_unsupported='null' to skip"
-                            )
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        vals = (None,) * 9
-                (fmt, n_frames, zc, sum_abs, peak,
-                 cen, bw, roll, flat) = vals
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["n_frames"].append(n_frames)
-                out["zero_crossings"].append(zc)
-                out["sum_abs"].append(sum_abs)
-                out["peak_abs"].append(peak)
-                out["spectral_centroid_hz"].append(cen)
-                out["spectral_bandwidth_hz"].append(bw)
-                out["spectral_rolloff_hz"].append(roll)
-                out["spectral_flatness"].append(flat)
-            yield pd.DataFrame(out)
+    def decode(b: bytes) -> list:
+        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            raise NotImplementedError(
+                "payload is not RIFF/WAVE PCM; compressed "
+                "audio (MP3/AAC/OGG) needs ffmpeg, not "
+                "present in this environment — pass "
+                "on_unsupported='null' to skip"
+            )
+        return [_audio_dsp(b)]
 
-    return media.mapInPandas(run, AUDIO_DSP_SCHEMA)
+    return payload_stage(media, decode, AUDIO_DSP_SCHEMA, on_unsupported)
 
 
 EMBED_SCHEMA = T.StructType(
@@ -4423,51 +4090,31 @@ def image_dhash(
 
     This is the multimodal twin of MinHash document dedup: near-dup
     detection joins on hash BANDS (dhash_near_dup), never all-pairs.
-    Same Arrow stage + two-tier error contract as decode_real."""
+    Same payload stage and capability limits as decode_real
+    (operators/records.py)."""
     if hash_w < 1 or hash_h < 1 or hash_w * hash_h > 64:
         raise ValueError("hash_w*hash_h must be in 1..64")
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    weights = np.array([299, 587, 114], dtype=np.int64)
+    n = hash_w * hash_h
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = np.array([299, 587, 114], dtype=np.int64)
-        for pdf in batches:
-            out = {f.name: [] for f in DHASH_SCHEMA.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                fmt = hv = None
-                if payload is not None:
-                    b = bytes(payload)
-                    try:
-                        fmt, w, h, _ch, rgb = _decode_rgb_bytes(
-                            b, "extract_media_features"
-                        )
-                        r = _nn_resize_rgb(rgb, w, h, hash_w + 1, hash_h)
-                        luma = (
-                            np.frombuffer(r, dtype=np.uint8)
-                            .reshape(hash_h, hash_w + 1, 3)
-                            .astype(np.int64)
-                            @ weights
-                        )
-                        bits = (luma[:, :-1] > luma[:, 1:]).reshape(-1)
-                        n = hash_w * hash_h
-                        packed = np.packbits(bits)  # MSB-first per byte
-                        v = int.from_bytes(packed.tobytes(), "big")
-                        v >>= 8 * packed.size - n  # drop pad bits
-                        if n == 64 and v >= 1 << 63:
-                            v -= 1 << 64  # two's complement signed long
-                        hv = v
-                    except NotImplementedError as exc:
-                        if on_unsupported == "error":
-                            raise NotImplementedError(
-                                f"media_id={mid}: {exc}"
-                            ) from exc
-                        fmt = hv = None
-                out["media_id"].append(mid)
-                out["format"].append(fmt)
-                out["dhash"].append(hv)
-            yield pd.DataFrame(out)
+    def decode(b: bytes) -> list:
+        fmt, w, h, _ch, rgb = _decode_rgb_bytes(b, "extract_media_features")
+        r = _nn_resize_rgb(rgb, w, h, hash_w + 1, hash_h)
+        luma = (
+            np.frombuffer(r, dtype=np.uint8)
+            .reshape(hash_h, hash_w + 1, 3)
+            .astype(np.int64)
+            @ weights
+        )
+        bits = (luma[:, :-1] > luma[:, 1:]).reshape(-1)
+        packed = np.packbits(bits)  # MSB-first per byte
+        v = int.from_bytes(packed.tobytes(), "big")
+        v >>= 8 * packed.size - n  # drop pad bits
+        if n == 64 and v >= 1 << 63:
+            v -= 1 << 64  # two's complement signed long
+        return [(fmt, v)]
 
-    return media.mapInPandas(run, DHASH_SCHEMA)
+    return payload_stage(media, decode, DHASH_SCHEMA, on_unsupported)
 
 
 def dhash_near_dup(
@@ -4631,12 +4278,7 @@ def mkv_probe(media: DataFrame, on_unsupported: str = "error") -> DataFrame:
     the filter/budget/dedup surface a 100 TB video corpus needs
     before any decode. Non-EBML payloads are a capability limit;
     malformed EBML trees always raise."""
-    return _run_probe(
-        media, _mkv_parse, MKV_SCHEMA, "MKV",
-        ("doc_type", "duration_ms", "n_tracks", "width", "height",
-         "has_video", "has_audio"),
-        on_unsupported,
-    )
+    return _run_probe(media, _mkv_parse, MKV_SCHEMA, "MKV", on_unsupported)
 
 
 def _ebml_el(eid: int, body: bytes) -> bytes:

@@ -36,17 +36,17 @@ Dialect (documented, oracle-replayable):
   data destinations (\\fonttbl, \\pict, \\info, \\* groups, ...)
   dropped (Microsoft RTF 1.9).
 
-Two-tier errors: non-ZIP, non-RTF payloads (incl. OLE legacy
-.doc/.xls) and ZIPs that are not a recognized Office/EPUB container
-are CAPABILITY limits; a recognized container with a
+Two-tier errors (operators/records.py): non-ZIP, non-RTF payloads
+(incl. OLE legacy .doc/.xls) and ZIPs that are not a recognized
+Office/EPUB container are CAPABILITY limits; a recognized container with a
 missing/TRUNCATED required part, undecodable XML, unbalanced RTF
 braces, or a DTD (OOXML parts never carry one — the check forecloses
 entity-expansion bombs in adversarial crawl data) is MALFORMED
 (ValueError).
 
-Scale: one Arrow-batched mapInPandas stage over (file_id, payload),
-part fan-out inside the batch, zero shuffle — the pdf_extract_text
-shape.
+Scale: the decoder family's one Arrow stage (operators/records.py)
+over (file_id, payload), part fan-out inside the batch, zero shuffle
+— the pdf_extract_text shape.
 """
 
 from __future__ import annotations
@@ -54,6 +54,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+
+from geist_spark.operators.records import payload_stage
 
 OFFICE_TEXT_SCHEMA = (
     "file_id long, format string, part string, text string, "
@@ -522,44 +524,20 @@ def office_extract_text(
 ) -> DataFrame:
     """Office document -> one row per text part: (file_id, format,
     part, text, n_chars). See the module docstring for the per-format
-    dialect and the two-tier error contract. One Arrow mapInPandas
-    stage, part fan-out inside the batch, zero shuffle (the
-    pdf_extract_text shape)."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    dialect and its capability limits (the two-tier contract is
+    operators/records.py's). One Arrow stage, part fan-out inside the
+    batch, zero shuffle (the pdf_extract_text shape)."""
     if max_bytes <= 0:
         raise ValueError("max_bytes must be positive")
-
-    def run(batches):
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in ("file_id", "format", "part", "text", "n_chars")
-            }
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    parts = list(
-                        _office_parts(bytes(payload), max_bytes)
-                    )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                for fmt, part, text in parts:
-                    rows["file_id"].append(fid)
-                    rows["format"].append(fmt)
-                    rows["part"].append(part)
-                    rows["text"].append(text)
-                    rows["n_chars"].append(len(text))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(run, OFFICE_TEXT_SCHEMA)
+    return payload_stage(
+        files,
+        lambda b: [
+            (fmt, part, text, len(text))
+            for fmt, part, text in _office_parts(b, max_bytes)
+        ],
+        OFFICE_TEXT_SCHEMA, on_unsupported, in_col=payload_col,
+        id_col=id_col, null_row=False,
+    )
 
 
 # ---------------------------------------------------------------------------

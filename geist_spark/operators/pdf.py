@@ -43,8 +43,9 @@ Scope:
   TJ kerning numbers are ignored (no synthetic spaces). The dialect
   is pinned by the w_pdf_extract oracle and the writer round-trip.
 
-Scale: one Arrow-batched mapInPandas stage over (file_id, payload),
-page fan-out inside the batch, zero shuffle — the WARC record-fan-out
+Scale: the decoder family's one Arrow stage (operators/records.py)
+over (file_id, payload), page fan-out inside the batch, zero shuffle
+— the WARC record-fan-out
 shape; at 100 TB the PDF paths list is the input table and this is
 the first pass after the object-store read.
 """
@@ -57,6 +58,8 @@ import struct
 from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
 from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 from pyspark.sql import DataFrame
+
+from geist_spark.operators.records import payload_stage
 
 PDF_TEXT_SCHEMA = "file_id long, page int, text string, n_chars int"
 
@@ -1454,46 +1457,26 @@ def pdf_extract_text(
     BT/ET text-operator assembly, simple fonts as WinAnsi and
     Identity-H Type0 fonts through their /ToUnicode CMap — see the
     module docstring for the exact scope and dialect. Two-tier
-    errors: non-PDF payloads, PASSWORDED PDFs (RC4/AESV2/AESV3
-    with an empty user password decrypt for real), non-Flate
-    filters, content predictors, and Type0 fonts without Identity
-    encoding + ToUnicode are CAPABILITY limits (raise naming the id,
-    or skip the file under on_unsupported='null'); structural damage
-    (bad xref, dangling refs, truncated streams, unbalanced tokens)
-    always raises ValueError.
+    errors (operators/records.py): non-PDF payloads, PASSWORDED PDFs
+    (RC4/AESV2/AESV3 with an empty user password decrypt for real),
+    non-Flate filters, content predictors, and Type0 fonts without
+    Identity encoding + ToUnicode are capability limits; structural
+    damage (bad xref, dangling refs, truncated streams, unbalanced
+    tokens) is malformed.
 
-    One Arrow mapInPandas stage, page fan-out inside the batch, zero
-    shuffle (the archive_extract_text shape).
+    One Arrow stage, page fan-out inside the batch, zero shuffle (the
+    archive_extract_text shape).
     """
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
     if max_bytes <= 0:
         raise ValueError("max_bytes must be positive")
-
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("file_id", "page", "text", "n_chars")}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    pages = list(_pdf_pages(bytes(payload), max_bytes))
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                for idx, text in pages:
-                    rows["file_id"].append(fid)
-                    rows["page"].append(idx)
-                    rows["text"].append(text)
-                    rows["n_chars"].append(len(text))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(run, PDF_TEXT_SCHEMA)
+    return payload_stage(
+        files,
+        lambda b: [
+            (idx, text, len(text)) for idx, text in _pdf_pages(b, max_bytes)
+        ],
+        PDF_TEXT_SCHEMA, on_unsupported, in_col=payload_col,
+        id_col=id_col, null_row=False,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from geist_spark.operators.dedup import shingles, tokens
+from geist_spark.operators.records import payload_stage
 
 # simple, RE2-safe patterns that parse identically in Java regex
 # (Spark) and RE2 (DuckDB): no backrefs, no lookaround
@@ -705,30 +706,24 @@ def decompress_text(
     b5 2f fd, multi-frame + skippable frames, content checksums
     verified), LZ4 frames (magic 04 22 4d 18, linked or independent
     blocks, block/content checksums verified) and framed Snappy
-    (sNaPpY stream, masked CRC-32C verified) — all inside one
-    Arrow-batched mapInPandas stage — zero shuffle, partitioning
-    preserved. Every codec but gzip/zlib is decoded by
-    operators/lzcodecs.py (pyarrow's native zstd/LZ4/Snappy, the
-    bounded stdlib bz2/xz stream walk). Returns (id, text utf-8 with
+    (sNaPpY stream, masked CRC-32C verified) — all inside the decoder
+    family's one Arrow stage — zero shuffle, partitioning preserved.
+    Every codec but gzip/zlib is decoded by operators/lzcodecs.py
+    (pyarrow's native zstd/LZ4/Snappy, the bounded stdlib bz2/xz
+    stream walk). Returns (id, text utf-8 with
     U+FFFD for invalid bytes, byte_len of the DECOMPRESSED payload).
 
-    Two-tier errors, repo contract: unknown magic (brotli — its
-    mandatory 120 KB static dictionary is not reproducible from
-    spec) and dictionary-keyed zstd/LZ4 frames are CAPABILITY
-    limits — raise naming the id, or NULL the row under
-    on_unsupported='null'; corrupt streams are MALFORMED and always
-    raise ValueError. Every codec's output is BOUNDED at max_bytes
-    (a decompression bomb raises the typed malformed error, never
-    OOMs the executor — the PNG IDAT rule)."""
+    Two-tier errors (operators/records.py; 1:1 NULL shape): unknown
+    magic (brotli — its mandatory 120 KB static dictionary is not
+    reproducible from spec) and dictionary-keyed zstd/LZ4 frames are
+    capability limits; corrupt streams are malformed. Every codec's
+    output is BOUNDED at max_bytes (a decompression bomb raises the
+    typed malformed error, never OOMs the executor — the PNG IDAT
+    rule)."""
     import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from geist_spark.operators import lzcodecs
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
     if max_bytes <= 0:
         raise ValueError("max_bytes must be positive")
 
@@ -758,97 +753,66 @@ def decompress_text(
                 raise ValueError("trailing garbage after zlib stream")
         return b"".join(parts)
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            ids, texts, lens = [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                text = blen = None
-                if payload is not None:
-                    b = bytes(payload)
-                    # zlib sniff per RFC 1950: compression method 8 in
-                    # the CMF low nibble AND the FCHECK checksum —
-                    # first-byte-only matching would route plain text
-                    # starting with 'x' (0x78) into the malformed tier
-                    is_zlib = (
-                        len(b) >= 2
-                        and (b[0] & 0x0F) == 8
-                        and ((b[0] << 8) | b[1]) % 31 == 0
-                    )
-                    is_bz2 = (
-                        len(b) >= 4
-                        and b[:3] == b"BZh"
-                        and 0x31 <= b[3] <= 0x39
-                    )
-                    # zstd and LZ4 share skippable frames: branch on
-                    # the magic of the first real frame behind them; a
-                    # skippable run with no LZ4 frame behind it goes to
-                    # the zstd decoder (malformed when nothing follows)
-                    skip = lzcodecs.skippable_prefix(b)
-                    is_lz4 = b[skip : skip + 4] == b"\x04\x22\x4d\x18"
-                    is_zstd = not is_lz4 and (
-                        b[:4] == b"\x28\xb5\x2f\xfd"
-                        or (
-                            len(b) >= 4
-                            and b[1:4] == b"\x2a\x4d\x18"
-                            and 0x50 <= b[0] <= 0x5F
-                        )
-                    )
-                    if b[:2] == b"\x1f\x8b" or is_zlib:
-                        raw = inflate(b)
-                    elif is_bz2:
-                        raw = lzcodecs.inflate_bx(b, "bz2", max_bytes)
-                    elif b[:6] == b"\xfd7zXZ\x00":
-                        raw = lzcodecs.inflate_bx(b, "xz", max_bytes)
-                    elif is_zstd:
-                        try:
-                            raw = lzcodecs.zstd_decompress(
-                                b, max_bytes=max_bytes
-                            )
-                        except NotImplementedError:
-                            # dictionary-keyed frame: capability limit
-                            if on_unsupported == "error":
-                                raise NotImplementedError(
-                                    f"{id_col}={did}: zstd frame requires "
-                                    "an external dictionary — pass "
-                                    "on_unsupported='null'"
-                                ) from None
-                            raw = None
-                    elif is_lz4:
-                        try:
-                            raw = lzcodecs.lz4_decompress(
-                                b, max_bytes=max_bytes
-                            )
-                        except NotImplementedError:
-                            if on_unsupported == "error":
-                                raise NotImplementedError(
-                                    f"{id_col}={did}: LZ4 dictionary "
-                                    "frame — pass on_unsupported='null'"
-                                ) from None
-                            raw = None
-                    elif b[:10] == lzcodecs.SNAPPY_STREAM_MAGIC:
-                        raw = lzcodecs.snappy_stream_decompress(
-                            b, max_bytes=max_bytes
-                        )
-                    elif on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={did}: payload is not gzip, zlib, "
-                            "bzip2, xz, zstd, lz4 or framed snappy "
-                            "(brotli not in this environment) — pass "
-                            "on_unsupported='null'"
-                        )
-                    else:
-                        raw = None
-                    if raw is not None:
-                        text = raw.decode("utf-8", errors="replace")
-                        blen = len(raw)
-                ids.append(did)
-                texts.append(text)
-                lens.append(blen)
-            yield pd.DataFrame(
-                {"doc_id": ids, "text": texts, "byte_len": lens}
+    def decode(b: bytes) -> list:
+        # zlib sniff per RFC 1950: compression method 8 in the CMF low
+        # nibble AND the FCHECK checksum — first-byte-only matching
+        # would route plain text starting with 'x' (0x78) into the
+        # malformed tier
+        is_zlib = (
+            len(b) >= 2
+            and (b[0] & 0x0F) == 8
+            and ((b[0] << 8) | b[1]) % 31 == 0
+        )
+        is_bz2 = len(b) >= 4 and b[:3] == b"BZh" and 0x31 <= b[3] <= 0x39
+        # zstd and LZ4 share skippable frames: branch on the magic of
+        # the first real frame behind them; a skippable run with no LZ4
+        # frame behind it goes to the zstd decoder (malformed when
+        # nothing follows)
+        skip = lzcodecs.skippable_prefix(b)
+        is_lz4 = b[skip : skip + 4] == b"\x04\x22\x4d\x18"
+        is_zstd = not is_lz4 and (
+            b[:4] == b"\x28\xb5\x2f\xfd"
+            or (
+                len(b) >= 4
+                and b[1:4] == b"\x2a\x4d\x18"
+                and 0x50 <= b[0] <= 0x5F
             )
+        )
+        if b[:2] == b"\x1f\x8b" or is_zlib:
+            raw = inflate(b)
+        elif is_bz2:
+            raw = lzcodecs.inflate_bx(b, "bz2", max_bytes)
+        elif b[:6] == b"\xfd7zXZ\x00":
+            raw = lzcodecs.inflate_bx(b, "xz", max_bytes)
+        elif is_zstd:
+            try:
+                raw = lzcodecs.zstd_decompress(b, max_bytes=max_bytes)
+            except NotImplementedError:
+                raise NotImplementedError(
+                    "zstd frame requires an external dictionary — pass "
+                    "on_unsupported='null'"
+                ) from None
+        elif is_lz4:
+            try:
+                raw = lzcodecs.lz4_decompress(b, max_bytes=max_bytes)
+            except NotImplementedError:
+                raise NotImplementedError(
+                    "LZ4 dictionary frame — pass on_unsupported='null'"
+                ) from None
+        elif b[:10] == lzcodecs.SNAPPY_STREAM_MAGIC:
+            raw = lzcodecs.snappy_stream_decompress(b, max_bytes=max_bytes)
+        else:
+            raise NotImplementedError(
+                "payload is not gzip, zlib, bzip2, xz, zstd, lz4 or framed "
+                "snappy (brotli not in this environment) — pass "
+                "on_unsupported='null'"
+            )
+        return [(raw.decode("utf-8", errors="replace"), len(raw))]
 
-    return documents.mapInPandas(run, DECOMPRESS_SCHEMA_DDL)
+    return payload_stage(
+        documents, decode, DECOMPRESS_SCHEMA_DDL, on_unsupported,
+        in_col=payload_col, id_col=id_col,
+    )
 
 
 ARCHIVE_LIST_SCHEMA = (
@@ -1046,38 +1010,12 @@ def archive_list(
     two-tier contract: foreign magic is a capability limit
     (ZIP64/encrypted/GNU-longname are typed limits too), structural
     damage raises. Map-only Arrow stage."""
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "file_id", "member_idx", "name", "size", "method",
-            )}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    members = list(
-                        _archive_members(bytes(payload), max_bytes)
-                    )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                for idx, name, size, method, _get in members:
-                    rows["file_id"].append(fid)
-                    rows["member_idx"].append(idx)
-                    rows["name"].append(name)
-                    rows["size"].append(size)
-                    rows["method"].append(method)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(run, ARCHIVE_LIST_SCHEMA)
+    return payload_stage(
+        files,
+        lambda b: [m[:4] for m in _archive_members(b, max_bytes)],
+        ARCHIVE_LIST_SCHEMA, on_unsupported, in_col=payload_col,
+        id_col=id_col, null_row=False,
+    )
 
 
 def archive_extract_text(
@@ -1093,39 +1031,18 @@ def archive_extract_text(
     every inflate bounded at max_bytes, utf-8 with U+FFFD. One
     Arrow stage; member fan-out happens inside the batch (the WARC
     record-fan-out shape)."""
-    import pandas as pd
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    def decode(b: bytes) -> list:
+        rows = []
+        for _idx, name, _size, _method, get in _archive_members(b, max_bytes):
+            if name.lower().endswith(suffixes):
+                raw = get()
+                rows.append(
+                    (name, raw.decode("utf-8", errors="replace"), len(raw))
+                )
+        return rows
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "file_id", "name", "text", "byte_len",
-            )}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    members = list(
-                        _archive_members(bytes(payload), max_bytes)
-                    )
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                for _idx, name, _size, _method, get in members:
-                    if not name.lower().endswith(suffixes):
-                        continue
-                    raw = get()
-                    rows["file_id"].append(fid)
-                    rows["name"].append(name)
-                    rows["text"].append(
-                        raw.decode("utf-8", errors="replace")
-                    )
-                    rows["byte_len"].append(len(raw))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(run, ARCHIVE_TEXT_SCHEMA)
+    return payload_stage(
+        files, decode, ARCHIVE_TEXT_SCHEMA, on_unsupported,
+        in_col=payload_col, id_col=id_col, null_row=False,
+    )

@@ -11,20 +11,22 @@ Safety: connections are opened query_only with a defensive row budget
 (a crafted many-billion-row file raises the typed malformed error before
 materializing); sqlite3.DatabaseError (not a database / corrupt pages)
 maps to ValueError; payloads without the 16-byte magic are a
-CAPABILITY limit. Virtual-table/extension-backed schemas surface
-whatever core SQLite can read — no extensions are loaded.
+capability limit (the two-tier contract of operators/records.py).
+Virtual-table/extension-backed schemas surface whatever core SQLite
+can read — no extensions are loaded.
 
-One Arrow mapInPandas stage, row fan-out inside the batch (the
-warc_parse shape). Reference parity: n/a (geist is JSON-only).
+The decoder family's one Arrow stage, row fan-out inside the batch
+(the warc_parse shape). Reference parity: n/a (geist is JSON-only).
 """
 
 from __future__ import annotations
 
 import base64
-import json
 import sqlite3
 
 from pyspark.sql import DataFrame
+
+from geist_spark.operators.records import payload_stage, to_json
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
 
@@ -78,50 +80,32 @@ def sqlite_tables(
 ) -> DataFrame:
     """Database census: one row per user table (name, exact row
     count, column count, CREATE sql)."""
-    import pandas as pd
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "file_id", "table_name", "n_rows", "n_cols", "sql"
-            )}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
+    def decode(b: bytes) -> list:
+        con = _open(b)
+        try:
+            rows = []
+            for name, sql in _tables(con):
                 try:
-                    con = _open(bytes(payload))
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                try:
-                    for name, sql in _tables(con):
-                        try:
-                            (n,) = con.execute(
-                                f'SELECT count(*) FROM "{name}"'
-                            ).fetchone()
-                            cols = con.execute(
-                                f'PRAGMA table_info("{name}")'
-                            ).fetchall()
-                        except sqlite3.DatabaseError as exc:
-                            raise ValueError(
-                                f"malformed SQLite database: {exc}"
-                            ) from None
-                        out["file_id"].append(fid)
-                        out["table_name"].append(name)
-                        out["n_rows"].append(n)
-                        out["n_cols"].append(len(cols))
-                        out["sql"].append(sql)
-                finally:
-                    con.close()
-            yield pd.DataFrame(out)
+                    (n,) = con.execute(
+                        f'SELECT count(*) FROM "{name}"'
+                    ).fetchone()
+                    cols = con.execute(
+                        f'PRAGMA table_info("{name}")'
+                    ).fetchall()
+                except sqlite3.DatabaseError as exc:
+                    raise ValueError(
+                        f"malformed SQLite database: {exc}"
+                    ) from None
+                rows.append((name, n, len(cols), sql))
+            return rows
+        finally:
+            con.close()
 
-    return files.mapInPandas(run, SQLITE_TABLES_SCHEMA)
+    return payload_stage(
+        files, decode, SQLITE_TABLES_SCHEMA, on_unsupported,
+        in_col=payload_col, id_col=id_col, null_row=False,
+    )
 
 
 def sqlite_rows(
@@ -133,62 +117,37 @@ def sqlite_rows(
 ) -> DataFrame:
     """Every user-table row as column-keyed compact JSON, rowid
     order, bounded at max_rows per file."""
-    import pandas as pd
 
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "file_id", "table_name", "row_idx", "row_json"
-            )}
-            for fid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
+    def decode(b: bytes) -> list:
+        con = _open(b)
+        try:
+            rows, budget = [], max_rows
+            for name, _sql in _tables(con):
                 try:
-                    con = _open(bytes(payload))
-                except NotImplementedError as exc:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={fid}: {exc}"
-                        ) from exc
-                    continue
-                try:
-                    budget = max_rows
-                    for name, _sql in _tables(con):
-                        try:
-                            cur = con.execute(f'SELECT * FROM "{name}"')
-                        except sqlite3.DatabaseError as exc:
-                            raise ValueError(
-                                f"malformed SQLite database: {exc}"
-                            ) from None
-                        cols = [d[0] for d in cur.description]
-                        for i, row in enumerate(cur):
-                            budget -= 1
-                            if budget < 0:
-                                raise ValueError(
-                                    "SQLite row budget exceeded "
-                                    f"(max_rows={max_rows})"
-                                )
-                            out["file_id"].append(fid)
-                            out["table_name"].append(name)
-                            out["row_idx"].append(i)
-                            out["row_json"].append(
-                                json.dumps(
-                                    {
-                                        c: _jsonable(v)
-                                        for c, v in zip(cols, row)
-                                    },
-                                    separators=(",", ":"),
-                                    ensure_ascii=False,
-                                )
-                            )
-                finally:
-                    con.close()
-            yield pd.DataFrame(out)
+                    cur = con.execute(f'SELECT * FROM "{name}"')
+                except sqlite3.DatabaseError as exc:
+                    raise ValueError(
+                        f"malformed SQLite database: {exc}"
+                    ) from None
+                cols = [d[0] for d in cur.description]
+                for i, row in enumerate(cur):
+                    budget -= 1
+                    if budget < 0:
+                        raise ValueError(
+                            "SQLite row budget exceeded "
+                            f"(max_rows={max_rows})"
+                        )
+                    rows.append((name, i, to_json(
+                        {c: _jsonable(v) for c, v in zip(cols, row)}
+                    )))
+            return rows
+        finally:
+            con.close()
 
-    return files.mapInPandas(run, SQLITE_ROWS_SCHEMA)
+    return payload_stage(
+        files, decode, SQLITE_ROWS_SCHEMA, on_unsupported,
+        in_col=payload_col, id_col=id_col, null_row=False,
+    )
 
 
 def sqlite_build(tables: dict) -> bytes:

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from geist_spark.operators.records import payload_stage
+
 # RFC 3986 component extraction (scheme://authority/path?query#fragment)
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 _AUTH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
@@ -356,92 +358,61 @@ def warc_parse(
     gzip-transport (concatenated members, stdlib zlib) and
     zstd-transport (.warc.zst, lzcodecs.zstd_decompress) WARCs.
 
-    The CommonCrawl ingestion stage: Arrow-batched mapInPandas over
-    (file_id, payload) — the record fan-out happens inside the stage,
-    zero shuffle, partitioning preserved; at 100 TB the WARC paths
-    list is the input table and this is the first pass after the
-    object-store read. Two-tier errors: a payload that is neither
-    WARC nor gzip is a CAPABILITY limit (raise naming the file_id /
-    NULL row under on_unsupported='null'); malformed or truncated
-    WARC structure always raises ValueError, and the gzip transport
-    inflate is BOUNDED at max_bytes per file (default 1 GiB — a gzip
-    bomb raises, never OOMs)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
+    The CommonCrawl ingestion stage: the decoder family's one Arrow
+    stage over (file_id, payload) — the record fan-out happens inside
+    the stage, zero shuffle, partitioning preserved; at 100 TB the
+    WARC paths list is the input table and this is the first pass
+    after the object-store read. Two-tier errors (operators/records.py;
+    a NULL payload or a limit under 'null' gives one NULL row): a
+    payload that is neither WARC, gzip nor zstd and a dictionary zstd
+    transport are capability limits; malformed or truncated WARC
+    structure is malformed, and the gzip transport inflate is BOUNDED
+    at max_bytes per file (default 1 GiB — a gzip bomb raises, never
+    OOMs)."""
     if max_bytes <= 0:
         raise ValueError("max_bytes must be positive")
-    cols = [c.strip().split(" ")[0] for c in WARC_SCHEMA_DDL.split(",")]
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out = {c: [] for c in cols}
-
-            def emit(fid, idx, wtype, uri, date, clen, status, ctype, body):
-                out["file_id"].append(fid)
-                out["rec_idx"].append(idx)
-                out["warc_type"].append(wtype)
-                out["target_uri"].append(uri)
-                out["warc_date"].append(date)
-                out["content_length"].append(clen)
-                out["http_status"].append(status)
-                out["http_content_type"].append(ctype)
-                out["body"].append(body)
-                out["body_len"].append(len(body) if body is not None else None)
-
-            for fid, payload in zip(pdf["file_id"], pdf["payload"]):
-                if payload is None:
-                    emit(fid, None, None, None, None, None, None, None, None)
-                    continue
-                b = bytes(payload)
-                is_zstd = b[:4] == b"\x28\xb5\x2f\xfd" or (
-                    len(b) >= 4
-                    and b[1:4] == b"\x2a\x4d\x18"
-                    and 0x50 <= b[0] <= 0x5F
-                )
-                if b[:5] != b"WARC/" and b[:2] != b"\x1f\x8b" and not is_zstd:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"file_id={fid}: payload is neither WARC, "
-                            "gzip nor zstd (ARC / other archive formats "
-                            "unsupported)"
+    def decode(b: bytes) -> list:
+        is_zstd = b[:4] == b"\x28\xb5\x2f\xfd" or (
+            len(b) >= 4
+            and b[1:4] == b"\x2a\x4d\x18"
+            and 0x50 <= b[0] <= 0x5F
+        )
+        if b[:5] != b"WARC/" and b[:2] != b"\x1f\x8b" and not is_zstd:
+            raise NotImplementedError(
+                "payload is neither WARC, gzip nor zstd (ARC / other "
+                "archive formats unsupported)"
+            )
+        rows = []
+        for idx, headers, block in _warc_records(b, max_bytes):
+            status, ctype, body = None, None, block
+            wtype = headers.get("warc-type")
+            if wtype in ("response", "revisit") and block[:5] == b"HTTP/":
+                split = block.find(b"\r\n\r\n")
+                head_end = split if split >= 0 else len(block)
+                hlines = block[:head_end].split(b"\r\n")
+                parts = hlines[0].split(b" ")
+                if len(parts) >= 2 and parts[1].isdigit():
+                    status = int(parts[1])
+                for hl in hlines[1:]:
+                    if hl[:13].lower() == b"content-type:":
+                        # charset param feeds decode_text's header tier
+                        # downstream
+                        ctype = hl[13:].strip().decode(
+                            "utf-8", errors="replace"
                         )
-                    emit(fid, None, None, None, None, None, None, None, None)
-                    continue
-                for idx, headers, block in _warc_records(b, max_bytes):
-                    status, ctype, body = None, None, block
-                    wtype = headers.get("warc-type")
-                    if (
-                        wtype in ("response", "revisit")
-                        and block[:5] == b"HTTP/"
-                    ):
-                        split = block.find(b"\r\n\r\n")
-                        head_end = split if split >= 0 else len(block)
-                        hlines = block[:head_end].split(b"\r\n")
-                        parts = hlines[0].split(b" ")
-                        if len(parts) >= 2 and parts[1].isdigit():
-                            status = int(parts[1])
-                        for hl in hlines[1:]:
-                            if hl[:13].lower() == b"content-type:":
-                                # charset param feeds decode_text's
-                                # header tier downstream
-                                ctype = hl[13:].strip().decode(
-                                    "utf-8", errors="replace"
-                                )
-                                break
-                        body = block[split + 4 :] if split >= 0 else b""
-                    emit(
-                        fid, idx, wtype,
-                        headers.get("warc-target-uri"),
-                        headers.get("warc-date"),
-                        int(headers["content-length"]),
-                        status, ctype, body,
-                    )
-            yield pd.DataFrame(out)
+                        break
+                body = block[split + 4 :] if split >= 0 else b""
+            rows.append((
+                idx, wtype, headers.get("warc-target-uri"),
+                headers.get("warc-date"), int(headers["content-length"]),
+                status, ctype, body, len(body),
+            ))
+        return rows
 
-    return files.mapInPandas(run, WARC_SCHEMA_DDL)
+    return payload_stage(
+        files, decode, WARC_SCHEMA_DDL, on_unsupported, id_col="file_id"
+    )
 
 
 # WHATWG Encoding Standard label remaps (the subset real crawls hit):
@@ -649,25 +620,20 @@ def decode_text(
     a quality filter can drop mojibake rows. Dialect notes: Python's
     cp1252 leaves 5 holes (0x81 0x8D 0x8F 0x90 0x9D) that WHATWG maps
     to C1 controls — they surface as U+FFFD here and count as
-    replacements. Unknown/forbidden charset labels are CAPABILITY
-    limits (raise naming the id / NULL row under
-    on_unsupported='null'); undecodable BYTES under a known charset
-    are data, not errors — they become U+FFFD and a nonzero
-    n_replacements, the browser behavior.
+    replacements. Unknown/forbidden charset labels are capability
+    limits (operators/records.py's two-tier contract, 1:1 NULL
+    shape); undecodable BYTES under a known charset are data, not
+    errors — they become U+FFFD and a nonzero n_replacements, the
+    browser behavior.
 
-    Scale: one Arrow-batched mapInPandas stage, zero shuffle,
+    Scale: the decoder family's one Arrow stage, zero shuffle,
     partitioning preserved — chains onto warc_parse's output in the
     same stage boundary at 100 TB. Returns (id, text, charset,
     charset_source, n_replacements).
     """
     import codecs
     import re
-    from collections.abc import Iterator
 
-    import pandas as pd
-
-    if on_unsupported not in ("error", "null"):
-        raise ValueError("on_unsupported must be 'error' or 'null'")
     if sniff_bytes <= 0:
         raise ValueError("sniff_bytes must be positive")
 
@@ -721,49 +687,20 @@ def decode_text(
         text, cs, src = declared(b, ctype)
         return _mislabel_sniff(b, text, cs, src)
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            ids, texts, charsets, sources, repls = [], [], [], [], []
-            ctypes = (
-                pdf[content_type_col]
-                if content_type_col is not None
-                else [None] * len(pdf)
-            )
-            for rid, body, ctype in zip(pdf[id_col], pdf[body_col], ctypes):
-                if body is None:
-                    ids.append(rid)
-                    texts.append(None)
-                    charsets.append(None)
-                    sources.append(None)
-                    repls.append(None)
-                    continue
-                try:
-                    text, cs, src = decode_one(bytes(body), ctype)
-                except NotImplementedError:
-                    if on_unsupported == "error":
-                        raise NotImplementedError(
-                            f"{id_col}={rid}: unsupported charset "
-                            "declaration"
-                        ) from None
-                    ids.append(rid)
-                    texts.append(None)
-                    charsets.append(None)
-                    sources.append(None)
-                    repls.append(None)
-                    continue
-                ids.append(rid)
-                texts.append(text)
-                charsets.append(cs)
-                sources.append(src)
-                repls.append(text.count("\ufffd"))
-            yield pd.DataFrame(
-                {
-                    id_col: ids, "text": texts, "charset": charsets,
-                    "charset_source": sources, "n_replacements": repls,
-                }
-            )
+    def decode(b: bytes, ctype=None) -> list:
+        try:
+            text, cs, src = decode_one(b, ctype)
+        except NotImplementedError:
+            raise NotImplementedError(
+                "unsupported charset declaration"
+            ) from None
+        return [(text, cs, src, text.count("\ufffd"))]
 
-    return records.mapInPandas(run, out_ddl)
+    return payload_stage(
+        records, decode, out_ddl, on_unsupported, in_col=body_col,
+        id_col=id_col,
+        extra_cols=() if content_type_col is None else (content_type_col,),
+    )
 
 
 def robots_rules(

@@ -159,6 +159,19 @@ def test_lz4_dictionary_is_capability_limit():
         lz4_decompress(blob, max_bytes=100)
 
 
+def test_lz4_later_dictionary_frame_is_capability_limit():
+    """A dictionary frame behind a plain one (and behind a skippable
+    frame) is tier-checked too: liblz4 would drop its blocks and
+    return the first frame's 120 bytes."""
+    dict_frame = bytes.fromhex("04224d18417007000000" "9b" "00000000")
+    skip = struct.pack("<II", 0x184D2A5F, 4) + b"meta"
+    first = pa.compress(b"hello world " * 10, codec="lz4", asbytes=True)
+    for blob in (first + dict_frame, first + skip + first + dict_frame):
+        with pytest.raises(NotImplementedError, match="dictionary"):
+            lz4_decompress(blob, max_bytes=10**6)
+    assert lz4_decompress(first + skip + first) == b"hello world " * 20
+
+
 def test_bombs_bounded():
     data = b"\x00" * 500000
     with pytest.raises(ValueError, match="max_bytes=1000"):

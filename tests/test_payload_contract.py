@@ -97,3 +97,42 @@ def test_two_tier_contract(spark, name):
     for mode in ("error", "null"):
         with pytest.raises(Exception, match=rf"ValueError: .*{bad_msg}"):
             call(frame((4, bad)), mode).collect()
+
+
+def _zip_encrypted_member() -> bytes:
+    """A stored a.txt whose central-directory flags say encrypted."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        z.writestr("a.txt", "plain", compress_type=zipfile.ZIP_STORED)
+    raw = bytearray(buf.getvalue())
+    cd = raw.index(b"PK\x01\x02")
+    raw[cd + 8] |= 0x01
+    return bytes(raw)
+
+
+def test_limits_found_inside_a_payload_take_the_contract(spark):
+    """A capability limit met mid-decode gets the same two tiers as
+    one met up front: an encrypted member of an otherwise readable
+    ZIP (archive_extract_text) and a dictionary zstd WARC transport
+    (warc_parse)."""
+    from geist_spark.operators.prep import archive_extract_text
+    from geist_spark.operators.web import warc_parse
+
+    # zstd frame header: single-segment off, 1-byte Dictionary_ID 7
+    dict_zstd = b"\x28\xb5\x2f\xfd" + bytes([0x01, 0x00, 0x07]) + bytes(8)
+    cases = (
+        (archive_extract_text, _zip_encrypted_member(), []),
+        (warc_parse, dict_zstd, [(5, *(None,) * 9)]),
+    )
+    for call, payload, null_rows in cases:
+        df = spark.createDataFrame(
+            [(5, payload)], "file_id long, payload binary"
+        ).coalesce(1)
+        limit = "NotImplementedError: file_id=5: "
+        with pytest.raises(Exception, match=limit):
+            call(df).collect()
+        got = call(df, on_unsupported="null").collect()
+        assert [tuple(r) for r in got] == null_rows

@@ -9,6 +9,7 @@ re-typed equivalents."""
 import copy
 import glob
 import json
+import os
 
 import pytest
 
@@ -25,7 +26,9 @@ def test_reference_corpus_present():
     assert len(SPEC_FILES) == 11
 
 
-@pytest.mark.parametrize("path", SPEC_FILES, ids=lambda p: p.split("/")[-1])
+@pytest.mark.parametrize(
+    "path", SPEC_FILES, ids=[p.split("/")[-1] for p in SPEC_FILES]
+)
 def test_reference_spec_validates_verbatim(path):
     from geist_spark.spec.model import parse_spec
 
@@ -54,7 +57,10 @@ def test_api_reference_specs_run_e2e(spark, name, event):
     from geist_spark.engine.api import Engine
     from geist_spark.sinks.keyed_table import new_temp_path
 
-    raw = copy.deepcopy(_load(f"{SPEC_DIR}/{name}.json"))
+    path = f"{SPEC_DIR}/{name}.json"
+    if not os.path.exists(path):
+        pytest.skip(f"reference corpus file absent: {path}")
+    raw = copy.deepcopy(_load(path))
     raw["sink"]["config"]["customConfig"]["path"] = new_temp_path()
     eng = Engine(spark)
     try:
